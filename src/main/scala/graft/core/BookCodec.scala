@@ -2,8 +2,8 @@ package graft.core
 
 import java.io.{ByteArrayInputStream, ByteArrayOutputStream, DataInputStream, DataOutputStream}
 
-/** Compact binary codec for OrderBook state — used by the window-function
-  * form's aggregation-buffer spill path and the streaming state store. */
+/** Compact binary codec for OrderBook state — the book blob of the
+  * streaming replays' state store and of the batch checkpoint/resume path. */
 object BookCodec {
 
   def serialize(book: OrderBook): Array[Byte] = {

@@ -1,6 +1,6 @@
 package graft.functions
 
-import graft.plans.BboWindowAggregate
+import graft.plans.{BboReplayStrategy, BboWindowAggregate}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{Cast, Expression, Literal}
 import org.apache.spark.sql.types.{BooleanType, IntegerType, LongType}
@@ -17,6 +17,12 @@ import org.apache.spark.sql.types.{BooleanType, IntegerType, LongType}
   *
   * The trailing integer literal is `n` (top-N depth), mirroring the
   * reference's `n` kwarg (reference __init__.py:22-210).
+  *
+  * The `bbo_from_price_*` functions require an ORDER BY and the frame
+  * `ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW`, and plan as the
+  * replay exec (`graft.plans.BboReplayExec`). Any other frame — including
+  * the default `RANGE` frame of a bare `OVER (... ORDER BY ...)` — and any
+  * use outside a window fail at planning with a named error.
   */
 object GraftFunctions {
 
@@ -74,6 +80,7 @@ object GraftFunctions {
   }
 
   def registerAll(spark: SparkSession): Unit = {
+    BboReplayStrategy.ensureRegistered(spark)
     val reg = spark.sessionState.functionRegistry
     builders.foreach { case (name, builder) =>
       reg.createOrReplaceTempFunction(name, builder, "built-in")

@@ -1,9 +1,7 @@
 package graft.operators
 
-import graft.core.{OrderBook, OrderBookException, Transitions}
-import org.apache.spark.sql.{Column, DataFrame, Encoder, Encoders, Row}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.catalyst
-import org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -12,9 +10,11 @@ import org.apache.spark.sql.types._
   *
   * The kernel is a per-group, strictly ordered, stateful 1-row-in →
   * 1-row-out fold, which Spark cannot express as an associative aggregate
-  * (no valid merge). The idiomatic embodiment is a shuffle on the partition
-  * keys followed by a sorted per-group fold:
-  * `groupByKey(partitionBy).flatMapSortedGroups(orderBy)(replay)`.
+  * (no valid merge). Its embodiment is the custom plan node
+  * [[graft.plans.BboReplayNode]]: Spark shuffles on the partition keys and
+  * sorts each partition by (partition keys, order keys); then
+  * [[graft.plans.BboReplayExec]] folds every book over the sorted rows.
+  * The `bbo_from_*` window forms plan as the same exec.
   *
   * Scale model: one order book (= one `partitionBy` group, e.g. one
   * product) is replayed by exactly one task; distinct products replay in
@@ -36,11 +36,6 @@ object OrderBookOps {
   def bboFieldNames(n: Int): Seq[String] =
     (1 to n).map(i => s"bid_price_$i") ++ (1 to n).map(i => s"bid_qty_$i") ++
       (1 to n).map(i => s"ask_price_$i") ++ (1 to n).map(i => s"ask_qty_$i")
-
-  private sealed trait Mode
-  private case object Updates extends Mode
-  private case object Mutations extends Mode
-  private case object Modify extends Mode
 
   /** O1 — replay level snapshots: qty>0 sets the level's qty, qty==0
     * removes it. Reference: __init__.py:157-210,
@@ -114,28 +109,9 @@ object OrderBookOps {
       .drop(evNames ++ pbNames ++ obNames: _*)
   }
 
-  /** flatMapSortedGroups embodiments — kept as the cross-implementation
-    * oracle for the custom physical operator (same results, Row-based). */
-  def topNLevelsFromPriceUpdatesViaGroups(
-      df: DataFrame, price: String, qty: String, isBid: String, n: Int,
-      partitionBy: Seq[String], orderBy: Seq[String]): DataFrame =
-    replay(df, price, qty, isBid, None, None, n, partitionBy, orderBy, Updates)
-
-  def topNLevelsFromPriceMutationsViaGroups(
-      df: DataFrame, price: String, qty: String, isBid: String, n: Int,
-      partitionBy: Seq[String], orderBy: Seq[String]): DataFrame =
-    replay(df, price, qty, isBid, None, None, n, partitionBy, orderBy, Mutations)
-
-  def topNLevelsFromPriceMutationsWithModifyViaGroups(
-      df: DataFrame, price: String, qty: String, isBid: String,
-      prevPrice: String, prevQty: String, n: Int,
-      partitionBy: Seq[String], orderBy: Seq[String]): DataFrame =
-    replay(df, price, qty, isBid, Some(prevPrice), Some(prevQty), n,
-      partitionBy, orderBy, Modify)
-
-  /** Fast path: plan the replay as the custom BboReplayNode — Spark
-    * inserts the (single) exchange + sort; the fold runs over UnsafeRows
-    * in BboReplayExec. */
+  /** Plan the replay as the custom BboReplayNode — Spark inserts the
+    * (single) exchange + sort; the fold runs over UnsafeRows in
+    * BboReplayExec. */
   private def replayExec(
       df: DataFrame, price: String, qty: String, isBid: String,
       prevPrice: Option[String], prevQty: Option[String], n: Int,
@@ -169,7 +145,7 @@ object OrderBookOps {
       prevPrice.map(asLong),
       prevQty.map(asLong),
       partitionBy.map(attr(_): catalyst.expressions.Expression),
-      orderBy.map(attr(_): catalyst.expressions.Expression),
+      orderBy.map(o => catalyst.expressions.SortOrder(attr(o), catalyst.expressions.Ascending)),
       BboReplayNode.mkBboAttrs(n),
       analyzed)
     GraftColumnBridge.ofRows(spark, node)
@@ -185,87 +161,4 @@ object OrderBookOps {
   /** Spark equivalent of Polars `unnest` (reference: README.md:34, 67). */
   def unnestStruct(df: DataFrame, structCol: String): DataFrame =
     df.select(col("*"), col(structCol + ".*")).drop(structCol)
-
-  private def replay(
-      df: DataFrame, price: String, qty: String, isBid: String,
-      prevPrice: Option[String], prevQty: Option[String], n: Int,
-      partitionBy: Seq[String], orderBy: Seq[String], mode: Mode): DataFrame = {
-    // Contract parity with the reference: n outside 1..=20 is rejected with
-    // the same message (calculate_bbo.rs:117-127). The core OrderBook
-    // itself handles any n >= 1 — the bound is a public-API contract.
-    require(n >= 1 && n <= 20, s"Unsupported number of levels: $n")
-    require(orderBy.nonEmpty,
-      "orderBy must be non-empty: Spark provides no implicit row order, and " +
-        "book replay is order-sensitive (reference README.md:182)")
-    val clash = df.columns.toSet.intersect(bboFieldNames(n).toSet)
-    require(clash.isEmpty, s"Input already has output columns: $clash")
-
-    val outSchema = StructType(df.schema.fields ++
-      bboFieldNames(n).map(StructField(_, LongType, nullable = true)))
-    val numIn = df.schema.size
-
-    // Internal casted event columns appended after the passthrough columns;
-    // they are read by the fold and never emitted.
-    val withEv0 = df
-      .withColumn("__g_price", col(price).cast(LongType))
-      .withColumn("__g_qty", col(qty).cast(LongType))
-      .withColumn("__g_isbid", col(isBid).cast(BooleanType))
-    val withEv = mode match {
-      case Modify => withEv0
-        .withColumn("__g_pprice", col(prevPrice.get).cast(LongType))
-        .withColumn("__g_pqty", col(prevQty.get).cast(LongType))
-      case _ => withEv0
-    }
-    val iPrice = numIn; val iQty = numIn + 1; val iBid = numIn + 2
-    val iPPrice = numIn + 3; val iPQty = numIn + 4
-
-    def replayGroup(it: Iterator[Row]): Iterator[Row] = {
-      val book = new OrderBook(n)
-      val width = numIn + 4 * n
-      it.map { row =>
-        if (row.isNullAt(iBid)) OrderBookException.missingValue(isBid)
-        if (row.isNullAt(iPrice)) OrderBookException.missingValue(price)
-        if (row.isNullAt(iQty)) OrderBookException.missingValue(qty)
-        val b = row.getBoolean(iBid)
-        val p = row.getLong(iPrice)
-        val q = row.getLong(iQty)
-        mode match {
-          case Updates   => Transitions.applyUpdate(book, b, p, q)
-          case Mutations => Transitions.applyMutation(book, b, p, q)
-          case Modify =>
-            val hasPP = !row.isNullAt(iPPrice)
-            val hasPQ = !row.isNullAt(iPQty)
-            Transitions.applyMutationWithModify(book, b, p, q,
-              hasPP, if (hasPP) row.getLong(iPPrice) else 0L,
-              hasPQ, if (hasPQ) row.getLong(iPQty) else 0L)
-        }
-        val out = new Array[Any](width)
-        var i = 0
-        while (i < numIn) { out(i) = row.get(i); i += 1 }
-        book.snapshotInto(out, numIn)
-        new GenericRowWithSchema(out, outSchema): Row
-      }
-    }
-
-    implicit val outEnc: Encoder[Row] = Encoders.row(outSchema)
-    val sortCols = orderBy.map(col)
-
-    if (partitionBy.isEmpty) {
-      // Single global book: one group, one task. Valid but serial — callers
-      // with multiple products should pass partition keys.
-      withEv.groupByKey(_ => 0)(Encoders.scalaInt)
-        .flatMapSortedGroups(sortCols: _*)((_, it) => replayGroup(it))
-    } else {
-      val keySchema = StructType(partitionBy.map(c =>
-        df.schema(df.schema.fieldIndex(c))).toArray)
-      val keyIdx = partitionBy.map(withEv.schema.fieldIndex).toArray
-      val keyEnc: Encoder[Row] = Encoders.row(keySchema)
-      withEv.groupByKey { r =>
-        val vs = new Array[Any](keyIdx.length)
-        var i = 0
-        while (i < keyIdx.length) { vs(i) = r.get(keyIdx(i)); i += 1 }
-        new GenericRowWithSchema(vs, keySchema): Row
-      }(keyEnc).flatMapSortedGroups(sortCols: _*)((_, it) => replayGroup(it))
-    }
-  }
 }

@@ -7,24 +7,26 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.SparkStrategy
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions._
-import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, UnaryNode}
+import org.apache.spark.sql.catalyst.expressions.aggregate.AggregateExpression
+import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Project, UnaryNode, Window}
 import org.apache.spark.sql.catalyst.plans.physical.{AllTuples, ClusteredDistribution, Distribution}
 import org.apache.spark.sql.execution.{SparkPlan, UnaryExecNode}
 import org.apache.spark.sql.execution.metric.SQLMetrics
 import org.apache.spark.sql.types.LongType
 
-/** Whole-operator form of the book replay: a custom LogicalPlan +
-  * SparkStrategy + SparkPlan (SURVEY.md §4 "custom pieces actually
-  * needed"), the fastest embodiment — the fold runs directly over
-  * UnsafeRows with Spark-planned exchange + sort, no per-row Row boxing
-  * (flatMapGroups) and no per-row aggregation-buffer eval (window form).
+/** The batch book replay: a custom LogicalPlan + SparkStrategy + SparkPlan
+  * (SURVEY.md §4 "custom pieces actually needed"), and the only batch
+  * engine — the `OrderBookOps` API and the `bbo_from_*` window forms (SQL
+  * and [[BboWindow]]) all plan as [[BboReplayExec]]. The fold runs
+  * directly over UnsafeRows with Spark-planned exchange + sort.
   *
   * Planner contract: `requiredChildDistribution` = clustered on the
   * partition keys (AllTuples when none → single global book) and
-  * `requiredChildOrdering` = (partition keys, order keys), so
-  * EnsureRequirements inserts exactly one hash exchange and one
-  * in-partition sort — the same minimal plan as a window function, with a
-  * straight-line fold instead of frame machinery.
+  * `requiredChildOrdering` = (partition keys ascending, order keys as
+  * given — direction and null ordering included), so EnsureRequirements
+  * inserts exactly one hash exchange and one in-partition sort — the same
+  * minimal plan as a window function, with a straight-line fold instead
+  * of frame machinery.
   */
 case class BboReplayNode(
     mode: Int, // 0 updates, 1 mutations, 2 modify
@@ -32,7 +34,7 @@ case class BboReplayNode(
     price: Expression, qty: Expression, isBid: Expression,
     prevPrice: Option[Expression], prevQty: Option[Expression],
     partitionKeys: Seq[Expression],
-    orderKeys: Seq[Expression],
+    orderKeys: Seq[SortOrder],
     bboAttrs: Seq[Attribute],
     child: LogicalPlan) extends UnaryNode {
 
@@ -56,7 +58,7 @@ case class BboReplayExec(
     price: Expression, qty: Expression, isBid: Expression,
     prevPrice: Option[Expression], prevQty: Option[Expression],
     partitionKeys: Seq[Expression],
-    orderKeys: Seq[Expression],
+    orderKeys: Seq[SortOrder],
     bboAttrs: Seq[Attribute],
     child: SparkPlan) extends UnaryExecNode {
 
@@ -69,7 +71,7 @@ case class BboReplayExec(
     else ClusteredDistribution(partitionKeys) :: Nil
 
   override def requiredChildOrdering: Seq[Seq[SortOrder]] =
-    Seq((partitionKeys ++ orderKeys).map(SortOrder(_, Ascending)))
+    Seq(partitionKeys.map(SortOrder(_, Ascending)) ++ orderKeys)
 
   override def outputPartitioning = child.outputPartitioning
   override def outputOrdering: Seq[SortOrder] = child.outputOrdering
@@ -243,15 +245,53 @@ object BboReplayExec {
   }
 }
 
-/** Planner strategy mapping the logical node to its exec. Registered
-  * idempotently on the session by the OrderBookOps API (and available via
+/** Planner strategy mapping the logical node to its exec. A `Window`
+  * holding `bbo_from_*` functions is rewritten into stacked
+  * [[BboReplayNode]]s first; any other plan node carrying one is rejected.
+  * Registered idempotently on the session by the OrderBookOps API, the
+  * [[BboWindow]] API and `GraftFunctions.registerAll` (and available via
   * `GraftExtensions` for spark.sql.extensions-based setups). */
 object BboReplayStrategy extends SparkStrategy {
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
     case BboReplayNode(mode, n, p, q, b, pp, pq, keys, ord, attrs, child) =>
       BboReplayExec(mode, n, p, q, b, pp, pq, keys, ord, attrs,
         planLater(child)) :: Nil
-    case _ => Nil
+    case w: Window if w.windowExpressions.exists(BboWindowAggregate.in) =>
+      planLater(replayWindow(w)) :: Nil
+    case other => other.expressions.find(BboWindowAggregate.in) match {
+      case Some(e) => BboWindowAggregate.unsupported(e)
+      case None => Nil
+    }
+  }
+
+  /** Each running-frame `bbo_from_*` becomes a BboReplayNode over the
+    * window's partition and order keys; a Project re-packs its 4·n level
+    * columns into the struct under the window column's attribute id. Other
+    * window functions stay in a Window above the replay, which already
+    * satisfies its distribution and ordering. */
+  private def replayWindow(w: Window): LogicalPlan = {
+    val (bbos, others) = w.windowExpressions.partition(BboWindowAggregate.in)
+    var replayed = w.child
+    val structs = bbos.map { e =>
+      val agg = e match {
+        case Alias(WindowExpression(
+            AggregateExpression(agg: BboWindowAggregate, _, false, None, _),
+            WindowSpecDefinition(_, order,
+              SpecifiedWindowFrame(RowFrame, UnboundedPreceding, CurrentRow))), _)
+            if order.nonEmpty => agg
+        case _ => BboWindowAggregate.unsupported(e)
+      }
+      val ev = agg.children
+      val node = BboReplayNode(agg.mode, agg.n, ev(0), ev(1), ev(2),
+        ev.lift(3), ev.lift(4), w.partitionSpec, w.orderSpec,
+        BboReplayNode.mkBboAttrs(agg.n), replayed)
+      replayed = node
+      e.exprId -> e.withNewChildren(Seq(CreateStruct(node.bboAttrs)))
+        .asInstanceOf[NamedExpression]
+    }.toMap
+    Project(
+      w.child.output ++ w.windowExpressions.map(e => structs.getOrElse(e.exprId, e.toAttribute)),
+      if (others.isEmpty) replayed else w.copy(windowExpressions = others, child = replayed))
   }
 
   def ensureRegistered(spark: SparkSession): Unit = synchronized {

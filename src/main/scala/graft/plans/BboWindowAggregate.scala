@@ -1,37 +1,30 @@
 package graft.plans
 
-import graft.core.{BookCodec, OrderBook, OrderBookException, Transitions}
+import graft.core.OrderBookException
 import graft.operators.OrderBookOps
-import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow}
-import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
+import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnevaluableAggregateFunc}
 import org.apache.spark.sql.GraftColumnBridge
 import org.apache.spark.sql.expressions.{Window, WindowSpec}
 import org.apache.spark.sql.types._
 
 /** The reference's expression form (a Polars expression plugin,
-  * calculate_bbo.rs:127-268) re-expressed as a Catalyst
-  * `TypedImperativeAggregate[OrderBook]` evaluated over a running window
-  * frame (`UNBOUNDED PRECEDING .. CURRENT ROW`).
+  * calculate_bbo.rs:127-268) as a Catalyst aggregate function that only
+  * analysis sees: it carries the mode, n, the event expressions and the
+  * result's struct type, and has no evaluation of its own.
   *
-  * Spark's unbounded-preceding frame calls `update` exactly once per row
-  * in frame order and `eval` after each row, so the per-row stateful fold
-  * is exact. `merge` throws: the fold is NOT associative (SURVEY.md §7.4),
-  * and running window frames never merge buffers — attempting to use this
-  * aggregate outside a window (where partial aggregation would merge)
-  * fails loudly instead of silently mis-computing.
+  * [[BboReplayStrategy]] plans every use over the running frame
+  * `ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW` (with an ORDER BY)
+  * as a [[BboReplayExec]]. Any other use — another frame, or a plain
+  * aggregate — fails at planning with [[BboWindowAggregate.unsupported]]:
+  * the fold is NOT associative (SURVEY.md §7.4), so a partial or shared
+  * frame value is not a book replay.
   *
   * modes: 0 = price updates (O1), 1 = price mutations (O2),
   * 2 = mutations with modify (O3; 5 child expressions).
   */
-case class BboWindowAggregate(
-    mode: Int,
-    n: Int,
-    children: Seq[Expression],
-    mutableAggBufferOffset: Int = 0,
-    inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[OrderBook] {
+case class BboWindowAggregate(mode: Int, n: Int, children: Seq[Expression])
+  extends UnevaluableAggregateFunc {
 
   require(n >= 1 && n <= 20, s"Unsupported number of levels: $n")
   require((mode == 2 && children.size == 5) || (mode != 2 && children.size == 3),
@@ -44,49 +37,6 @@ case class BboWindowAggregate(
     StructType(OrderBookOps.bboFieldNames(n)
       .map(StructField(_, LongType, nullable = true)))
 
-  override def createAggregationBuffer(): OrderBook = new OrderBook(n)
-
-  override def update(book: OrderBook, input: InternalRow): OrderBook = {
-    val pv = children(0).eval(input)
-    val qv = children(1).eval(input)
-    val bv = children(2).eval(input)
-    if (bv == null) OrderBookException.missingValue("is_bid")
-    if (pv == null) OrderBookException.missingValue("price")
-    if (qv == null) OrderBookException.missingValue("qty")
-    val p = pv.asInstanceOf[Long]
-    val q = qv.asInstanceOf[Long]
-    val b = bv.asInstanceOf[Boolean]
-    mode match {
-      case 0 => Transitions.applyUpdate(book, b, p, q)
-      case 1 => Transitions.applyMutation(book, b, p, q)
-      case 2 =>
-        val ppv = children(3).eval(input)
-        val pqv = children(4).eval(input)
-        Transitions.applyMutationWithModify(book, b, p, q,
-          ppv != null, if (ppv != null) ppv.asInstanceOf[Long] else 0L,
-          pqv != null, if (pqv != null) pqv.asInstanceOf[Long] else 0L)
-    }
-    book
-  }
-
-  override def merge(a: OrderBook, b: OrderBook): OrderBook =
-    throw new UnsupportedOperationException(
-      "bbo is an ordered stateful fold with no associative merge; evaluate " +
-        "it over a running window frame (UNBOUNDED PRECEDING .. CURRENT ROW)")
-
-  override def eval(book: OrderBook): Any = {
-    val out = new Array[Any](4 * n)
-    book.snapshotInto(out, 0)
-    new GenericInternalRow(out)
-  }
-
-  override def serialize(book: OrderBook): Array[Byte] = BookCodec.serialize(book)
-  override def deserialize(bytes: Array[Byte]): OrderBook = BookCodec.deserialize(bytes)
-
-  override def withNewMutableAggBufferOffset(offset: Int): BboWindowAggregate =
-    copy(mutableAggBufferOffset = offset)
-  override def withNewInputAggBufferOffset(offset: Int): BboWindowAggregate =
-    copy(inputAggBufferOffset = offset)
   override protected def withNewChildrenInternal(
       newChildren: IndexedSeq[Expression]): BboWindowAggregate =
     copy(children = newChildren)
@@ -98,10 +48,25 @@ case class BboWindowAggregate(
   }
 }
 
+object BboWindowAggregate {
+  def in(e: Expression): Boolean = e.exists(_.isInstanceOf[BboWindowAggregate])
+
+  /** The error for any use the replay exec cannot plan; `e` is the
+    * offending (window or aggregate) expression. */
+  def unsupported(e: Expression): Nothing = {
+    val fn = e.collectFirst { case b: BboWindowAggregate => b.prettyName }.get
+    throw new OrderBookException(
+      s"$fn must run as a window function with an ORDER BY over the frame " +
+        "ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW: the book replay " +
+        "is an ordered fold with no associative merge, so another frame or " +
+        s"a plain aggregate is not a replay (got ${e.sql})")
+  }
+}
+
 /** Column-level API for the window form: returns a struct column
   * (`bid_price_1..n, bid_qty_1..n, ask_price_1..n, ask_qty_1..n`) — the
   * reference's pre-`unnest` shape, composable inside any windowed
-  * DataFrame expression. */
+  * DataFrame expression. It plans as [[BboReplayExec]], like the SQL form. */
 object BboWindow {
 
   private def runningFrame(partitionBy: Seq[Column], orderBy: Seq[Column]): WindowSpec = {
@@ -113,6 +78,7 @@ object BboWindow {
 
   private def agg(mode: Int, n: Int, cols: Seq[Column],
                   partitionBy: Seq[Column], orderBy: Seq[Column]): Column = {
+    SparkSession.getActiveSession.foreach(BboReplayStrategy.ensureRegistered)
     val children = cols.map(c => GraftColumnBridge.expression(c))
     val e = BboWindowAggregate(mode, n, children).toAggregateExpression()
     GraftColumnBridge.column(e).over(runningFrame(partitionBy, orderBy))

@@ -106,6 +106,18 @@ object OrderBookStream {
       case None => lit(null).cast(TimestampType).as("et")
     }
 
+  /** Every streaming entry point keys its state by the partition column and
+    * sorts a batch by the order column, both cast to long: a fractional
+    * key would silently merge books and scramble order, so only integral
+    * columns are accepted. */
+  private def requireIntegral(df: DataFrame, cols: String*): Unit = cols.foreach { c =>
+    val t = df.schema(c).dataType
+    require(t == LongType || t == IntegerType || t == ShortType || t == ByteType,
+      s"column '$c' must be an integral type for the streaming replay " +
+        s"(got ${t.catalogString}); fractional keys would silently merge " +
+        "books / scramble order")
+  }
+
   /** Max event time of a batch in epoch millis (Long.MinValue when no
     * event times ride the batch). */
   private[streaming] def maxEventMs(ets: Iterator[java.sql.Timestamp]): Long = {
@@ -173,17 +185,7 @@ object OrderBookStream {
         StructField(orderBy, LongType) +:
         OrderBookOps.bboFieldNames(n).map(StructField(_, LongType, nullable = true)))
 
-    def requireIntegral(c: String): Unit = {
-      val t = df.schema(c).dataType
-      require(t == LongType || t == IntegerType ||
-        t == org.apache.spark.sql.types.ShortType ||
-        t == org.apache.spark.sql.types.ByteType,
-        s"column '$c' must be an integral type for the streaming replay " +
-          s"(got ${t.catalogString})")
-    }
-    requireIntegral(partitionBy)
-    requireIntegral(orderBy)
-
+    requireIntegral(df, partitionBy, orderBy)
     val work = df.select(
       col(partitionBy).cast("long").as("pkey"),
       col(orderBy).cast("long").as("okey"),
@@ -282,16 +284,7 @@ object OrderBookStream {
           Seq(StructField("ofi", LongType, nullable = false),
             StructField("cum_ofi", LongType, nullable = false))))
 
-    def requireIntegral(c: String): Unit = {
-      val t = df.schema(c).dataType
-      require(t == LongType || t == IntegerType ||
-        t == org.apache.spark.sql.types.ShortType ||
-        t == org.apache.spark.sql.types.ByteType,
-        s"column '$c' must be an integral type for the streaming replay " +
-          s"(got ${t.catalogString})")
-    }
-    requireIntegral(partitionBy)
-    requireIntegral(orderBy)
+    requireIntegral(df, partitionBy, orderBy)
     val work = df.select(
       col(partitionBy).cast("long").as("pkey"),
       col(orderBy).cast("long").as("okey"),
@@ -423,6 +416,7 @@ object OrderBookStream {
       StructField("n_moves", LongType, nullable = false),
       StructField("rv_x4", LongType, nullable = false)))
 
+    requireIntegral(df, partitionBy, orderBy)
     val work = df.select(
       col(partitionBy).cast("long").as("pkey"),
       col(orderBy).cast("long").as("okey"),
@@ -533,17 +527,7 @@ object OrderBookStream {
         StructField(orderBy, LongType) +:
         OrderBookOps.bboFieldNames(n).map(StructField(_, LongType, nullable = true)))
 
-    def requireIntegral(c: String): Unit = {
-      val t = df.schema(c).dataType
-      require(t == LongType || t == IntegerType ||
-        t == org.apache.spark.sql.types.ShortType ||
-        t == org.apache.spark.sql.types.ByteType,
-        s"column '$c' must be an integral type for the streaming replay " +
-          s"(got ${t.catalogString}); fractional keys would silently merge " +
-          "books / scramble order")
-    }
-    requireIntegral(partitionBy)
-    requireIntegral(orderBy)
+    requireIntegral(df, partitionBy, orderBy)
     val work = df.select(
       col(partitionBy).cast("long").as("pkey"),
       col(orderBy).cast("long").as("okey"),

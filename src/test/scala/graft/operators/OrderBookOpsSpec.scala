@@ -206,10 +206,10 @@ class OrderBookOpsSpec extends AnyFunSuite {
       val (a, b) =
         if (mutation)
           (run(OrderBookOps.topNLevelsFromPriceMutations),
-            run(OrderBookOps.topNLevelsFromPriceMutationsViaGroups))
+            run(FlatMapGroupsOracle.topNLevelsFromPriceMutationsViaGroups))
         else
           (run(OrderBookOps.topNLevelsFromPriceUpdates),
-            run(OrderBookOps.topNLevelsFromPriceUpdatesViaGroups))
+            run(FlatMapGroupsOracle.topNLevelsFromPriceUpdatesViaGroups))
       assert(a.size == 1000 && a == b, s"mutation=$mutation")
     }
   }

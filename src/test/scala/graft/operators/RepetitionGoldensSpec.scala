@@ -9,8 +9,9 @@ import org.scalatest.funsuite.AnyFunSuite
 /** The reference's repetition-scaled goldens
   * (test_calculate_bbo.py:12-127: the 12-event fill-and-fully-drain
   * pattern at input repetition {10, 100, 1000} × n ∈ {1, 2, 4}), run
-  * against EVERY batch engine form — custom physical operator,
-  * flatMapSortedGroups oracle, window aggregate, parallel-prefix replay.
+  * against EVERY batch API form — the replay exec through the operator
+  * API and through the window Column API, the parallel-prefix replay —
+  * and the test-side flatMapSortedGroups oracle.
   * The pattern drains the book each cycle, so the expected top-1 values
   * repeat with period 12 and one id→expected map checks any repetition. */
 class RepetitionGoldensSpec extends AnyFunSuite {
@@ -69,10 +70,10 @@ class RepetitionGoldensSpec extends AnyFunSuite {
           df, "price", "qty", "is_bid", n, Seq("product"), Seq("seq"))
     case "groups" =>
       if (mutation)
-        OrderBookOps.topNLevelsFromPriceMutationsViaGroups(
+        FlatMapGroupsOracle.topNLevelsFromPriceMutationsViaGroups(
           df, "price", "qty", "is_bid", n, Seq("product"), Seq("seq"))
       else
-        OrderBookOps.topNLevelsFromPriceUpdatesViaGroups(
+        FlatMapGroupsOracle.topNLevelsFromPriceUpdatesViaGroups(
           df, "price", "qty", "is_bid", n, Seq("product"), Seq("seq"))
     case "window" =>
       val bbo =
@@ -138,7 +139,7 @@ class RepetitionGoldensSpec extends AnyFunSuite {
           df, "price", "qty", "is_bid", "prev_price", "prev_qty", n,
           Seq("product"), Seq("seq"))
       case "groups" =>
-        OrderBookOps.topNLevelsFromPriceMutationsWithModifyViaGroups(
+        FlatMapGroupsOracle.topNLevelsFromPriceMutationsWithModifyViaGroups(
           df, "price", "qty", "is_bid", "prev_price", "prev_qty", n,
           Seq("product"), Seq("seq"))
       case "window" =>

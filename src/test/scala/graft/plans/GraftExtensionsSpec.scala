@@ -25,18 +25,20 @@ class GraftExtensionsSpec extends AnyFunSuite {
       Seq((1L, 0L, true, 10L, 5L), (2L, 0L, false, 12L, 3L), (3L, 0L, true, 11L, 2L))
         .toDF("seq", "product", "is_bid", "price", "qty")
         .createOrReplaceTempView("ext_stream")
-      // SQL function injected by the extension — no registerAll call
-      val out = spark.sql(
+      // SQL function injected by the extension — no registerAll call —
+      // and planned as the replay exec by the injected strategy
+      val sqlDf = spark.sql(
         """SELECT seq, bbo_from_price_updates(price, qty, is_bid, 1) OVER (
           |  PARTITION BY product ORDER BY seq
           |  ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS bbo
           |FROM ext_stream""".stripMargin)
-        .select(col("seq"), col("bbo.bid_price_1")).orderBy("seq").collect()
+      assert(sqlDf.queryExecution.sparkPlan.collect { case e: BboReplayExec => e }.nonEmpty)
+      val out = sqlDf.select(col("seq"), col("bbo.bid_price_1")).orderBy("seq").collect()
       assert(out.length == 3 && out(2).getLong(1) == 11L)
       // strategy injected: plan a BboReplayNode DIRECTLY (bypassing the
       // operator API, which would lazily register the strategy itself) —
       // planning only succeeds if the extension injected it
-      import org.apache.spark.sql.catalyst.expressions.Cast
+      import org.apache.spark.sql.catalyst.expressions.{Ascending, Cast, SortOrder}
       import org.apache.spark.sql.types.{BooleanType, LongType}
       val df = spark.table("ext_stream")
       val analyzed = df.queryExecution.analyzed
@@ -44,7 +46,7 @@ class GraftExtensionsSpec extends AnyFunSuite {
       val node = BboReplayNode(0, 1,
         Cast(attr("price"), LongType), Cast(attr("qty"), LongType),
         Cast(attr("is_bid"), BooleanType), None, None,
-        Seq(attr("product")), Seq(attr("seq")),
+        Seq(attr("product")), Seq(SortOrder(attr("seq"), Ascending)),
         BboReplayNode.mkBboAttrs(1), analyzed)
       val replayed = org.apache.spark.sql.GraftColumnBridge.ofRows(spark, node)
         .orderBy("seq").collect()

@@ -186,15 +186,25 @@ class PlanAuditSpec extends AnyFunSuite {
     }
   }
 
+  // the window forms of the book replay (SQL and Column API) must plan
+  // as the replay exec: no WindowExec may evaluate a bbo_from_* function
+  private val replayWindowRows =
+    Set("bbo_sql_updates_n1", "bbo_sql_updates_n2", "bbo_window_updates_n2")
+
   test("no unpartitioned window exec in any registry plan") {
     Registry.all.foreach { q =>
-      val bad = planOf(q.name).linesIterator.filter { l =>
-        val t = l.trim
-        (t.contains("Window ") || t.contains("WindowGroupLimit ")) &&
-          t.contains("], [], [")
+      val plan = planOf(q.name)
+      val windows = plan.linesIterator.map(_.trim).filter { t =>
+        t.contains("Window ") || t.contains("WindowGroupLimit ")
       }.toList
+      val bad = windows.filter(_.contains("], [], ["))
       assert(bad.isEmpty,
         s"${q.name} plans an unpartitioned window: ${bad.headOption.getOrElse("")}")
+      assert(!windows.exists(_.contains("bbo_from_")),
+        s"${q.name} evaluates a bbo_from_* function in a WindowExec")
+      if (replayWindowRows(q.name))
+        // the tree string names an exec by its node name, "BboReplay"
+        assert(plan.contains("BboReplay "), s"${q.name} does not plan BboReplayExec")
     }
   }
 }

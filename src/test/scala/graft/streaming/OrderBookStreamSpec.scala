@@ -189,4 +189,27 @@ class OrderBookStreamSpec extends AnyFunSuite {
     assert(streamed.length == 8)
     streamed.zip(batch).foreach { case (s, b) => assert(s == b) }
   }
+
+  // Every streaming entry point casts its keys to long; a DOUBLE order key
+  // would scramble the replay order, so each must reject one up front.
+  private val entryPoints: Seq[(String, org.apache.spark.sql.DataFrame => Any)] = Seq(
+    "topNLevelsFromPriceUpdates" -> (df => OrderBookStream.topNLevelsFromPriceUpdates(
+      df, "price", "qty", "is_bid", 1, "product", "seq")),
+    "topNLevelsFromPriceMutations" -> (df => OrderBookStream.topNLevelsFromPriceMutations(
+      df, "price", "qty", "is_bid", 1, "product", "seq")),
+    "topNLevelsFromPriceMutationsWithModify" -> (df =>
+      OrderBookStream.topNLevelsFromPriceMutationsWithModify(
+        df, "price", "qty", "is_bid", "prev_price", "prev_qty", 1, "product", "seq")),
+    "ofiFromPriceUpdates" -> (df => OrderBookStream.ofiFromPriceUpdates(
+      df, "price", "qty", "is_bid", "product", "seq")),
+    "analyticsSummaryStream" -> (df => OrderBookStream.analyticsSummaryStream(
+      df, "price", "qty", "is_bid", "product", "seq")))
+
+  for ((name, entry) <- entryPoints)
+    test(s"$name rejects a DOUBLE orderBy") {
+      val df = Seq((1L, 0.5, 10L, 1L, true, Option.empty[Long], Option.empty[Long]))
+        .toDF("product", "seq", "price", "qty", "is_bid", "prev_price", "prev_qty")
+      val e = intercept[IllegalArgumentException](entry(df))
+      assert(e.getMessage.contains("'seq' must be an integral type"), e.getMessage)
+    }
 }
