@@ -263,11 +263,41 @@ final class OrderBook(val n: Int) extends BookKernel {
   }
 }
 
+/** Which of the three public operators a replay folds (reference:
+  * polars_order_book/src/update.rs:18-84). Every replay surface — the
+  * exec, the window functions, checkpoints, the parallel and the
+  * streaming replays — carries one and folds through [[Transitions.apply]].
+  * `name` is the operator's suffix (`bbo_from_<name>`); `arity` counts its
+  * event columns: price, qty, is_bid and, for Modify, the nullable
+  * prev_price and prev_qty. */
+sealed abstract class ReplayMode(val name: String, val arity: Int)
+
+object ReplayMode {
+  case object Updates extends ReplayMode("price_updates", 3)
+  case object Mutations extends ReplayMode("price_mutations", 3)
+  case object Modify extends ReplayMode("price_mutations_with_modify", 5)
+
+  /** The public-API depth bound, with the reference's message
+    * (calculate_bbo.rs:117-127); the kernels themselves take any n >= 1. */
+  def requireLevels(n: Int): Unit =
+    require(n >= 1 && n <= 20, s"Unsupported number of levels: $n")
+}
+
 /** Per-row transition functions — the three public operators' semantics
   * (reference: polars_order_book/src/update.rs:95-163). Polymorphic over
   * [[BookKernel]] so both the unified and the n=1 scalar engines share
   * them. */
 object Transitions {
+
+  /** One event under `mode`; only Modify reads the prev fields. */
+  def apply(mode: ReplayMode, book: BookKernel, isBid: Boolean, price: Long, qty: Long,
+            hasPrevPrice: Boolean, prevPrice: Long,
+            hasPrevQty: Boolean, prevQty: Long): Unit = mode match {
+    case ReplayMode.Updates => applyUpdate(book, isBid, price, qty)
+    case ReplayMode.Mutations => applyMutation(book, isBid, price, qty)
+    case ReplayMode.Modify => applyMutationWithModify(book, isBid, price, qty,
+      hasPrevPrice, prevPrice, hasPrevQty, prevQty)
+  }
 
   /** O1 — price updates (level snapshots): always set_level.
     * Reference: update.rs:101-105. */

@@ -1,9 +1,10 @@
 package graft.functions
 
+import graft.core.ReplayMode
 import graft.plans.{BboReplayStrategy, BboWindowAggregate}
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.expressions.{Cast, Expression, Literal}
-import org.apache.spark.sql.types.{BooleanType, IntegerType, LongType}
+import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
+import org.apache.spark.sql.types.IntegerType
 
 /** SQL-surface registration: makes the engine's custom expressions
   * callable from `spark.sql` —
@@ -69,9 +70,9 @@ object GraftFunctions {
       require(exprs.size == 2, "min_k(bigint_col, k literal) — aggregate")
       LongMinK(exprs.head, intLit(exprs(1), "k"))
     },
-    "bbo_from_price_updates" -> (exprs => mkBbo(0, 4, exprs)),
-    "bbo_from_price_mutations" -> (exprs => mkBbo(1, 4, exprs)),
-    "bbo_from_price_mutations_with_modify" -> (exprs => mkBbo(2, 6, exprs)))
+    "bbo_from_price_updates" -> (exprs => mkBbo(ReplayMode.Updates, exprs)),
+    "bbo_from_price_mutations" -> (exprs => mkBbo(ReplayMode.Mutations, exprs)),
+    "bbo_from_price_mutations_with_modify" -> (exprs => mkBbo(ReplayMode.Modify, exprs)))
 
   private def intLit(e: Expression, what: String): Int = e match {
     case Literal(v: Int, IntegerType) => v
@@ -87,22 +88,17 @@ object GraftFunctions {
     }
   }
 
-  private def mkBbo(mode: Int, arity: Int, exprs: Seq[Expression]): Expression = {
-    require(exprs.size == arity,
-      s"expected $arity arguments (event columns..., n literal), got ${exprs.size}")
+  private def mkBbo(mode: ReplayMode, exprs: Seq[Expression]): Expression = {
+    require(exprs.size == mode.arity + 1,
+      s"expected ${mode.arity + 1} arguments (event columns..., n literal), got ${exprs.size}")
     val n = exprs.last match {
       case Literal(v: Int, IntegerType) => v
       case other => throw new IllegalArgumentException(
         s"the last argument must be an integer literal for n, got $other")
     }
-    // Cast event children to the fold's types at analysis time (the Scala
-    // BboWindow API casts; without this an INT price column would fail at
-    // execution with a ClassCastException instead of resolving cleanly).
-    // Child order is (price, qty, is_bid[, prev_price, prev_qty]).
-    val casted = exprs.init.zipWithIndex.map {
-      case (e, 2) => Cast(e, BooleanType)
-      case (e, _) => Cast(e, LongType)
-    }
-    BboWindowAggregate(mode, n, casted.toIndexedSeq).toAggregateExpression()
+    // Cast event children to the fold's types at analysis time, as the
+    // BboWindow API does: an INT price column then resolves cleanly.
+    BboWindowAggregate(mode, n, BboWindowAggregate.castEvents(exprs.init))
+      .toAggregateExpression()
   }
 }

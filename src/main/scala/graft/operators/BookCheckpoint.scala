@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.core.{BookCodec, OrderBook, OrderBookException, Transitions}
+import graft.core.{BookCodec, OrderBook, ReplayMode}
 import org.apache.spark.sql.{DataFrame, Encoder, Encoders, Row}
 import org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema
 import org.apache.spark.sql.functions._
@@ -27,16 +27,8 @@ import org.apache.spark.sql.types._
   */
 object BookCheckpoint {
 
-  import OrderBookOps.bboFieldNames
-
-  /** Which of the three reference entry points (update.rs:95-163) the
-    * fold replays; Modify carries the nullable prev columns. */
-  private sealed trait Mode { def prev: Option[(String, String)] = None }
-  private case object Updates extends Mode
-  private case object Mutations extends Mode
-  private final case class Modify(prevPrice: String, prevQty: String) extends Mode {
-    override def prev: Option[(String, String)] = Some((prevPrice, prevQty))
-  }
+  import OrderBookOps.{applyRow, bboFieldNames}
+  import ReplayMode.{Modify, Mutations, Updates}
 
   /** Final book state per group after replaying `df` (O1 level-snapshot
     * transitions) in `orderBy` order: (partition cols..., book_state).
@@ -44,7 +36,7 @@ object BookCheckpoint {
   def bookStateSnapshots(df: DataFrame, price: String, qty: String,
                          isBid: String, n: Int, partitionBy: Seq[String],
                          orderBy: Seq[String]): DataFrame =
-    snapshots(df, price, qty, isBid, n, partitionBy, orderBy, Updates)
+    snapshots(df, price, qty, isBid, n, partitionBy, orderBy, Updates, None)
 
   /** [[bookStateSnapshots]] for the O2 transition (signed quantity
     * MUTATIONS fold into levels) — the checkpoint for mutation-stream
@@ -53,7 +45,7 @@ object BookCheckpoint {
                                       qty: String, isBid: String, n: Int,
                                       partitionBy: Seq[String],
                                       orderBy: Seq[String]): DataFrame =
-    snapshots(df, price, qty, isBid, n, partitionBy, orderBy, Mutations)
+    snapshots(df, price, qty, isBid, n, partitionBy, orderBy, Mutations, None)
 
   /** [[bookStateSnapshots]] for the O3 transition (mutation-with-modify,
     * the reference's 9-case table at update.rs:132-161) — completes the
@@ -62,18 +54,19 @@ object BookCheckpoint {
       df: DataFrame, price: String, qty: String, isBid: String,
       prevPrice: String, prevQty: String, n: Int,
       partitionBy: Seq[String], orderBy: Seq[String]): DataFrame =
-    snapshots(df, price, qty, isBid, n, partitionBy, orderBy,
-      Modify(prevPrice, prevQty))
+    snapshots(df, price, qty, isBid, n, partitionBy, orderBy, Modify,
+      Some((prevPrice, prevQty)))
 
   private def snapshots(df: DataFrame, price: String, qty: String,
                         isBid: String, n: Int, partitionBy: Seq[String],
-                        orderBy: Seq[String], mode: Mode): DataFrame = {
-    require(n >= 1 && n <= 20, s"Unsupported number of levels: $n")
+                        orderBy: Seq[String], mode: ReplayMode,
+                        prev: Option[(String, String)]): DataFrame = {
+    ReplayMode.requireLevels(n)
     require(orderBy.nonEmpty,
       "orderBy must be non-empty: book replay is order-sensitive")
     require(!df.columns.contains("book_state"),
       "Input already has output column book_state")
-    val withEv = castedEvents(df, price, qty, isBid, mode)
+    val withEv = withEvents(df, price, qty, isBid, prev)
     val numIn = df.schema.size
     val keySchema = StructType(partitionBy.map(c =>
       df.schema(df.schema.fieldIndex(c))).toArray)
@@ -85,7 +78,7 @@ object BookCheckpoint {
 
     def fold(keyVals: Seq[Any], it: Iterator[Row]): Iterator[Row] = {
       val book = new OrderBook(n)
-      it.foreach(applyRow(book, _, numIn, price, qty, isBid, mode))
+      it.foreach(applyRow(mode, book, _, numIn, price, qty, isBid))
       val out = new Array[Any](width)
       var i = 0
       while (i < keyVals.length) { out(i) = keyVals(i); i += 1 }
@@ -120,7 +113,7 @@ object BookCheckpoint {
                                 orderBy: Seq[String],
                                 stateCol: String = "book_state"): DataFrame =
     resumedSnapshots(df, states, price, qty, isBid, n, partitionBy,
-      orderBy, stateCol, Updates)
+      orderBy, stateCol, Updates, None)
 
   /** [[bookStateSnapshotsResumed]] for the O2 mutation transition. */
   def bookStateSnapshotsResumedFromMutations(
@@ -128,7 +121,7 @@ object BookCheckpoint {
       isBid: String, n: Int, partitionBy: Seq[String],
       orderBy: Seq[String], stateCol: String = "book_state"): DataFrame =
     resumedSnapshots(df, states, price, qty, isBid, n, partitionBy,
-      orderBy, stateCol, Mutations)
+      orderBy, stateCol, Mutations, None)
 
   /** [[bookStateSnapshotsResumed]] for the O3 modify transition. */
   def bookStateSnapshotsResumedFromMutationsWithModify(
@@ -137,14 +130,15 @@ object BookCheckpoint {
       partitionBy: Seq[String], orderBy: Seq[String],
       stateCol: String = "book_state"): DataFrame =
     resumedSnapshots(df, states, price, qty, isBid, n, partitionBy,
-      orderBy, stateCol, Modify(prevPrice, prevQty))
+      orderBy, stateCol, Modify, Some((prevPrice, prevQty)))
 
   private def resumedSnapshots(df: DataFrame, states: DataFrame,
                                price: String, qty: String, isBid: String,
                                n: Int, partitionBy: Seq[String],
                                orderBy: Seq[String], stateCol: String,
-                               mode: Mode): DataFrame = {
-    require(n >= 1 && n <= 20, s"Unsupported number of levels: $n")
+                               mode: ReplayMode,
+                               prev: Option[(String, String)]): DataFrame = {
+    ReplayMode.requireLevels(n)
     require(orderBy.nonEmpty,
       "orderBy must be non-empty: book replay is order-sensitive")
     require(partitionBy.nonEmpty,
@@ -155,7 +149,7 @@ object BookCheckpoint {
     // stateCol chain breaks on its second day
     require(!df.columns.contains(stateCol),
       s"Input already has output column $stateCol")
-    val withEv = castedEvents(df, price, qty, isBid, mode)
+    val withEv = withEvents(df, price, qty, isBid, prev)
     val numIn = df.schema.size
     val keySchema = StructType(partitionBy.map(c =>
       df.schema(df.schema.fieldIndex(c))).toArray)
@@ -173,27 +167,16 @@ object BookCheckpoint {
       .cogroupSorted(
         states.groupByKey(rowKey(stKeyIdx, keySchema))(keyEnc))(
         sortCols: _*)() { (key, evIt, stIt) =>
-        val stateRows = stIt.take(2).toList
-        require(stateRows.size <= 1,
-          s"resumed snapshots: multiple checkpoint rows for group " +
-            s"${key.toSeq.mkString(",")}")
-        val book = stateRows match {
-          case r :: Nil => BookCodec.deserialize(
-            r.getAs[Array[Byte]](stStateIdx))
-          case _ => new OrderBook(n)
-        }
-        require(book.n == n,
-          s"checkpoint was built at n=${book.n}; resumed snapshots " +
-            s"requested n=$n (the stored state pins n)")
+        val (book, stored) = restore("resumed snapshots", key, stIt, stStateIdx, n)
         var sawEvent = false
         evIt.foreach { row =>
           sawEvent = true
-          applyRow(book, row, numIn, price, qty, isBid, mode)
+          applyRow(mode, book, row, numIn, price, qty, isBid)
         }
         // carry-forward: a stored group with no events today keeps its
         // state; a fresh group with no events (impossible via cogroup,
         // but defensive) emits nothing
-        if (!sawEvent && stateRows.isEmpty) Iterator.empty
+        if (!sawEvent && !stored) Iterator.empty
         else {
           val out = new Array[Any](width)
           var i = 0
@@ -219,7 +202,7 @@ object BookCheckpoint {
                                        orderBy: Seq[String],
                                        stateCol: String = "book_state"): DataFrame =
     resume(df, states, price, qty, isBid, n, partitionBy, orderBy,
-      stateCol, Updates)
+      stateCol, Updates, None)
 
   /** [[resumeTopNLevelsFromPriceUpdates]] for the O2 transition. */
   def resumeTopNLevelsFromPriceMutations(df: DataFrame, states: DataFrame,
@@ -229,7 +212,7 @@ object BookCheckpoint {
                                          orderBy: Seq[String],
                                          stateCol: String = "book_state"): DataFrame =
     resume(df, states, price, qty, isBid, n, partitionBy, orderBy,
-      stateCol, Mutations)
+      stateCol, Mutations, None)
 
   /** [[resumeTopNLevelsFromPriceUpdates]] for the O3 transition —
     * day-2 modify streams continue from the day-1 state. Rows whose
@@ -243,7 +226,7 @@ object BookCheckpoint {
       partitionBy: Seq[String], orderBy: Seq[String],
       stateCol: String = "book_state"): DataFrame =
     resume(df, states, price, qty, isBid, n, partitionBy, orderBy,
-      stateCol, Modify(prevPrice, prevQty))
+      stateCol, Modify, Some((prevPrice, prevQty)))
 
   private def resume(df: DataFrame, states: DataFrame,
                      price: String, qty: String,
@@ -251,8 +234,9 @@ object BookCheckpoint {
                      partitionBy: Seq[String],
                      orderBy: Seq[String],
                      stateCol: String,
-                     mode: Mode): DataFrame = {
-    require(n >= 1 && n <= 20, s"Unsupported number of levels: $n")
+                     mode: ReplayMode,
+                     prev: Option[(String, String)]): DataFrame = {
+    ReplayMode.requireLevels(n)
     require(orderBy.nonEmpty,
       "orderBy must be non-empty: book replay is order-sensitive")
     require(partitionBy.nonEmpty,
@@ -261,7 +245,7 @@ object BookCheckpoint {
     val clash = df.columns.toSet.intersect(bboFieldNames(n).toSet)
     require(clash.isEmpty, s"Input already has output columns: $clash")
 
-    val withEv = castedEvents(df, price, qty, isBid, mode)
+    val withEv = withEvents(df, price, qty, isBid, prev)
     val numIn = df.schema.size
     val outSchema = StructType(df.schema.fields ++
       bboFieldNames(n).map(StructField(_, LongType, nullable = true)))
@@ -279,19 +263,9 @@ object BookCheckpoint {
       .cogroupSorted(
         states.groupByKey(rowKey(stKeyIdx, keySchema))(keyEnc))(
         sortCols: _*)() { (key, evIt, stIt) =>
-        val stateRows = stIt.take(2).toList
-        require(stateRows.size <= 1,
-          s"resume: multiple checkpoint rows for group ${key.toSeq.mkString(",")}")
-        val book = stateRows match {
-          case r :: Nil => BookCodec.deserialize(
-            r.getAs[Array[Byte]](stStateIdx))
-          case _ => new OrderBook(n)
-        }
-        require(book.n == n,
-          s"checkpoint was built at n=${book.n}; resume requested n=$n " +
-            "(the stored state pins n — rebuild the checkpoint to change it)")
+        val (book, _) = restore("resume", key, stIt, stStateIdx, n)
         evIt.map { row =>
-          applyRow(book, row, numIn, price, qty, isBid, mode)
+          applyRow(mode, book, row, numIn, price, qty, isBid)
           val out = new Array[Any](width)
           var i = 0
           while (i < numIn) { out(i) = row.get(i); i += 1 }
@@ -301,43 +275,27 @@ object BookCheckpoint {
       }
   }
 
-  /** Shared event casting: appends __g_price/__g_qty/__g_isbid (and, for
-    * Modify, the nullable __g_pprice/__g_pqty) after the passthrough
+  /** `df` with [[OrderBookOps.eventColumns]] appended after its own
     * columns (read by the folds, never emitted). */
-  private def castedEvents(df: DataFrame, price: String, qty: String,
-                           isBid: String, mode: Mode): DataFrame = {
-    val base = df.withColumn("__g_price", col(price).cast(LongType))
-      .withColumn("__g_qty", col(qty).cast(LongType))
-      .withColumn("__g_isbid", col(isBid).cast(BooleanType))
-    mode.prev.fold(base) { case (pp, pq) =>
-      base.withColumn("__g_pprice", col(pp).cast(LongType))
-        .withColumn("__g_pqty", col(pq).cast(LongType))
-    }
-  }
+  private def withEvents(df: DataFrame, price: String, qty: String,
+                         isBid: String, prev: Option[(String, String)]): DataFrame =
+    df.select(col("*") +: OrderBookOps.eventColumns(price, qty, isBid, prev): _*)
 
-  /** One O1/O2/O3 transition with the replay operators' null contract. */
-  private def applyRow(book: OrderBook, row: Row, numIn: Int,
-                       price: String, qty: String,
-                       isBid: String, mode: Mode): Unit = {
-    val iPrice = numIn; val iQty = numIn + 1; val iBid = numIn + 2
-    if (row.isNullAt(iBid)) OrderBookException.missingValue(isBid)
-    if (row.isNullAt(iPrice)) OrderBookException.missingValue(price)
-    if (row.isNullAt(iQty)) OrderBookException.missingValue(qty)
-    mode match {
-      case Updates =>
-        Transitions.applyUpdate(book, row.getBoolean(iBid),
-          row.getLong(iPrice), row.getLong(iQty))
-      case Mutations =>
-        Transitions.applyMutation(book, row.getBoolean(iBid),
-          row.getLong(iPrice), row.getLong(iQty))
-      case Modify(_, _) =>
-        val iPp = numIn + 3; val iPq = numIn + 4
-        val hasPp = !row.isNullAt(iPp); val hasPq = !row.isNullAt(iPq)
-        Transitions.applyMutationWithModify(book, row.getBoolean(iBid),
-          row.getLong(iPrice), row.getLong(iQty),
-          hasPp, if (hasPp) row.getLong(iPp) else 0L,
-          hasPq, if (hasPq) row.getLong(iPq) else 0L)
-    }
+  /** The book a resumed group starts from, and whether it was stored: the
+    * group's state row decoded, or a fresh book when it has none. Several
+    * state rows, or a state stored at another n, fail loudly; `what` names
+    * the caller in the message. */
+  private def restore(what: String, key: Row, stIt: Iterator[Row],
+                      stateIdx: Int, n: Int): (OrderBook, Boolean) = {
+    val stateRows = stIt.take(2).toList
+    require(stateRows.size <= 1,
+      s"$what: multiple checkpoint rows for group ${key.toSeq.mkString(",")}")
+    val book = stateRows.headOption.fold(new OrderBook(n))(r =>
+      BookCodec.deserialize(r.getAs[Array[Byte]](stateIdx)))
+    require(book.n == n,
+      s"checkpoint was built at n=${book.n}; $what requested n=$n " +
+        "(the stored state pins n — rebuild the checkpoint to change it)")
+    (book, stateRows.nonEmpty)
   }
 
   private def rowKey(keyIdx: Array[Int], keySchema: StructType): Row => Row =

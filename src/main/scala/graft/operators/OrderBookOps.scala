@@ -1,6 +1,7 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import graft.core.{BookKernel, OrderBookException, ReplayMode, Transitions}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.catalyst
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -43,14 +44,16 @@ object OrderBookOps {
   def topNLevelsFromPriceUpdates(
       df: DataFrame, price: String, qty: String, isBid: String, n: Int,
       partitionBy: Seq[String], orderBy: Seq[String]): DataFrame =
-    replayExec(df, price, qty, isBid, None, None, n, partitionBy, orderBy, 0)
+    replayExec(df, price, qty, isBid, None, None, n, partitionBy, orderBy,
+      ReplayMode.Updates)
 
   /** O2 — replay signed deltas: qty>0 adds, qty<0 deletes |qty|, qty==0
     * no-op. Reference: __init__.py:101-154, calculate_bbo.rs:172-215. */
   def topNLevelsFromPriceMutations(
       df: DataFrame, price: String, qty: String, isBid: String, n: Int,
       partitionBy: Seq[String], orderBy: Seq[String]): DataFrame =
-    replayExec(df, price, qty, isBid, None, None, n, partitionBy, orderBy, 1)
+    replayExec(df, price, qty, isBid, None, None, n, partitionBy, orderBy,
+      ReplayMode.Mutations)
 
   /** O3 — as O2 plus modify (move/resize an order) when prev_price/prev_qty
     * are set; both-or-neither semantics per row enforced by the 9-case
@@ -61,7 +64,7 @@ object OrderBookOps {
       prevPrice: String, prevQty: String, n: Int,
       partitionBy: Seq[String], orderBy: Seq[String]): DataFrame =
     replayExec(df, price, qty, isBid, Some(prevPrice), Some(prevQty), n,
-      partitionBy, orderBy, 2)
+      partitionBy, orderBy, ReplayMode.Modify)
 
   // ---- Column-typed overloads ------------------------------------------
   // The reference's primary API accepts `pl.Expr | str` (_utils.py:15-52);
@@ -111,17 +114,14 @@ object OrderBookOps {
 
   /** Plan the replay as the custom BboReplayNode — Spark inserts the
     * (single) exchange + sort; the fold runs over UnsafeRows in
-    * BboReplayExec. */
-  private def replayExec(
+    * BboReplayExec. `prevPrice`/`prevQty` are read by Modify only. */
+  private[operators] def replayExec(
       df: DataFrame, price: String, qty: String, isBid: String,
       prevPrice: Option[String], prevQty: Option[String], n: Int,
-      partitionBy: Seq[String], orderBy: Seq[String], mode: Int): DataFrame = {
+      partitionBy: Seq[String], orderBy: Seq[String], mode: ReplayMode): DataFrame = {
     import graft.plans.{BboReplayNode, BboReplayStrategy}
     import org.apache.spark.sql.GraftColumnBridge
-    // Contract parity with the reference: n outside 1..=20 is rejected with
-    // the same message (calculate_bbo.rs:117-127). The core OrderBook
-    // itself handles any n >= 1 — the bound is a public-API contract.
-    require(n >= 1 && n <= 20, s"Unsupported number of levels: $n")
+    ReplayMode.requireLevels(n)
     require(orderBy.nonEmpty,
       "orderBy must be non-empty: Spark provides no implicit row order, and " +
         "book replay is order-sensitive (reference README.md:182)")
@@ -149,6 +149,34 @@ object OrderBookOps {
       BboReplayNode.mkBboAttrs(n),
       analyzed)
     GraftColumnBridge.ofRows(spark, node)
+  }
+
+  // ---- Row-based folds (checkpoints, streaming) ------------------------
+
+  /** The event columns a Row-based fold reads, in [[applyRow]]'s order:
+    * price, qty, is_bid, prev_price, prev_qty — cast to the fold's types,
+    * the prev pair null when absent. */
+  private[graft] def eventColumns(price: String, qty: String, isBid: String,
+                                  prev: Option[(String, String)]): Seq[Column] = Seq(
+    col(price).cast(LongType).as("__ev_price"),
+    col(qty).cast(LongType).as("__ev_qty"),
+    col(isBid).cast(BooleanType).as("__ev_is_bid"),
+    prev.fold(lit(null))(p => col(p._1)).cast(LongType).as("__ev_prev_price"),
+    prev.fold(lit(null))(p => col(p._2)).cast(LongType).as("__ev_prev_qty"))
+
+  /** Fold the [[eventColumns]] starting at ordinal `at` of `row` into
+    * `book`, with the exec's null contract: a null price, qty or is_bid
+    * raises the missing-value error naming the caller's column. */
+  private[graft] def applyRow(mode: ReplayMode, book: BookKernel, row: Row, at: Int,
+                              price: String, qty: String, isBid: String): Unit = {
+    if (row.isNullAt(at + 2)) OrderBookException.missingValue(isBid)
+    if (row.isNullAt(at)) OrderBookException.missingValue(price)
+    if (row.isNullAt(at + 1)) OrderBookException.missingValue(qty)
+    val hasPP = !row.isNullAt(at + 3)
+    val hasPQ = !row.isNullAt(at + 4)
+    Transitions(mode, book, row.getBoolean(at + 2), row.getLong(at), row.getLong(at + 1),
+      hasPP, if (hasPP) row.getLong(at + 3) else 0L,
+      hasPQ, if (hasPQ) row.getLong(at + 4) else 0L)
   }
 
   /** Re-assemble the flat bbo columns into a single struct column, the

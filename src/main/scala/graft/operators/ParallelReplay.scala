@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.core.ReplayMode
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -44,8 +45,8 @@ object ParallelReplay {
   def topNLevelsFromPriceUpdatesParallel(
       df: DataFrame, price: String, qty: String, isBid: String, n: Int,
       partitionBy: String, orderBy: String, segments: Int): DataFrame =
-    replayParallel(df, price, qty, isBid, n, partitionBy, orderBy, segments,
-      mutation = false)
+    replayParallel(df, price, qty, isBid, None, n, partitionBy, orderBy, segments,
+      ReplayMode.Updates)
 
   // ---- auto-segmented variants -----------------------------------------
   // Pick `segments` from data statistics instead of a caller constant, so
@@ -126,8 +127,8 @@ object ParallelReplay {
   def topNLevelsFromPriceMutationsParallel(
       df: DataFrame, price: String, qty: String, isBid: String, n: Int,
       partitionBy: String, orderBy: String, segments: Int): DataFrame =
-    replayParallel(df, price, qty, isBid, n, partitionBy, orderBy, segments,
-      mutation = true)
+    replayParallel(df, price, qty, isBid, None, n, partitionBy, orderBy, segments,
+      ReplayMode.Mutations)
 
   /** O3 parallel replay. Every modify decomposes into at most two
     * row-local level deltas (update.rs:132-161 is state-free), so segment
@@ -137,15 +138,17 @@ object ParallelReplay {
       df: DataFrame, price: String, qty: String, isBid: String,
       prevPrice: String, prevQty: String, n: Int,
       partitionBy: String, orderBy: String, segments: Int): DataFrame =
-    replayParallel(df, price, qty, isBid, n, partitionBy, orderBy, segments,
-      mutation = true, modifyCols = Some((prevPrice, prevQty)))
+    replayParallel(df, price, qty, isBid, Some((prevPrice, prevQty)), n,
+      partitionBy, orderBy, segments, ReplayMode.Modify)
 
+  /** `prev` holds Modify's (prev_price, prev_qty) columns. */
   private def replayParallel(
-      df: DataFrame, price: String, qty: String, isBid: String, n: Int,
+      df: DataFrame, price: String, qty: String, isBid: String,
+      prev: Option[(String, String)], n: Int,
       partitionBy: String, orderBy: String, segments: Int,
-      mutation: Boolean, modifyCols: Option[(String, String)] = None): DataFrame = {
+      mode: ReplayMode): DataFrame = {
     require(segments >= 1, "segments must be >= 1")
-    require(n >= 1 && n <= 20, s"Unsupported number of levels: $n")
+    ReplayMode.requireLevels(n)
     // The segment fold's max_by tiebreak and the segmentation both read the
     // order column through cast(long); a timestamp cast TRUNCATES to whole
     // seconds, which would make sub-second-distinct events tie in max_by
@@ -206,36 +209,33 @@ object ParallelReplay {
     }
 
     // -- stage 2: per-segment net states and entering (prefix) states -----
-    val segState =
-      if (modifyCols.isDefined) {
-        val (ppCol, pqCol) = modifyCols.get
+    val segState = mode match {
+      case ReplayMode.Modify =>
+        val (ppCol, pqCol) = prev.get
         withSeg
           .withColumn("__delta", explode(modifyDeltas(
             col(ppCol).cast(LongType), col(pqCol).cast(LongType))))
           .groupBy(col(partitionBy).as("__p"), col("__seg"),
             col("__g_isbid").as("__b"), col("__delta.px").as("__px"))
           .agg(sum(col("__delta.dq")).as("__state"))
-      } else if (mutation)
+      case ReplayMode.Mutations =>
         withSeg.groupBy(col(partitionBy).as("__p"), col("__seg"),
             col("__g_isbid").as("__b"), col("__g_price").as("__px"))
           .agg(sum(col("__g_qty")).as("__state"))
-      else
+      case ReplayMode.Updates =>
         withSeg.groupBy(col(partitionBy).as("__p"), col("__seg"),
             col("__g_isbid").as("__b"), col("__g_price").as("__px"))
           .agg(max_by(col("__g_qty"), col(orderBy).cast("long")).as("__state"))
+    }
 
     // each segment state applies to every LATER segment; prefix-combine
     val fanned = segState
       .filter(col("__seg") < segments - 1)
       .withColumn("__target",
         explode(sequence(col("__seg") + 1, lit(segments - 1))))
-    val entering =
-      if (mutation)
-        fanned.groupBy(col("__p"), col("__target"), col("__b"), col("__px"))
-          .agg(sum(col("__state")).as("__q0"))
-      else
-        fanned.groupBy(col("__p"), col("__target"), col("__b"), col("__px"))
-          .agg(max_by(col("__state"), col("__seg")).as("__q0"))
+    val entering = fanned.groupBy(col("__p"), col("__target"), col("__b"), col("__px"))
+      .agg((if (mode == ReplayMode.Updates) max_by(col("__state"), col("__seg"))
+        else sum(col("__state"))).as("__q0"))
 
     // -- stage 3: inject entering states as *seed events* ordered before
     // each segment's real events, then run the fast UnsafeRow exec
@@ -259,20 +259,9 @@ object ParallelReplay {
           lit(0).as("__rank")): _*)
     val unioned = evSide.unionByName(seedSide)
 
-    val replayed =
-      if (modifyCols.isDefined) {
-        val (ppCol, pqCol) = modifyCols.get
-        OrderBookOps.topNLevelsFromPriceMutationsWithModify(
-          unioned, "__g_price", "__g_qty", "__g_isbid", ppCol, pqCol, n,
-          Seq(partitionBy, "__seg"), Seq("__rank", orderBy))
-      } else if (mutation)
-        OrderBookOps.topNLevelsFromPriceMutations(
-          unioned, "__g_price", "__g_qty", "__g_isbid", n,
-          Seq(partitionBy, "__seg"), Seq("__rank", orderBy))
-      else
-        OrderBookOps.topNLevelsFromPriceUpdates(
-          unioned, "__g_price", "__g_qty", "__g_isbid", n,
-          Seq(partitionBy, "__seg"), Seq("__rank", orderBy))
+    val replayed = OrderBookOps.replayExec(
+      unioned, "__g_price", "__g_qty", "__g_isbid", prev.map(_._1), prev.map(_._2), n,
+      Seq(partitionBy, "__seg"), Seq("__rank", orderBy), mode)
 
     replayed.filter(col("__rank") === 1)
       .select((df.columns.toIndexedSeq ++ OrderBookOps.bboFieldNames(n)).map(col): _*)

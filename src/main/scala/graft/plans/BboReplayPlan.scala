@@ -1,6 +1,6 @@
 package graft.plans
 
-import graft.core.{BookKernel, OrderBookException, Transitions}
+import graft.core.{BookKernel, OrderBookException, ReplayMode, Transitions}
 import graft.operators.OrderBookOps
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.SparkSession
@@ -29,7 +29,7 @@ import org.apache.spark.sql.types.LongType
   * of frame machinery.
   */
 case class BboReplayNode(
-    mode: Int, // 0 updates, 1 mutations, 2 modify
+    mode: ReplayMode,
     n: Int,
     price: Expression, qty: Expression, isBid: Expression,
     prevPrice: Option[Expression], prevQty: Option[Expression],
@@ -54,7 +54,7 @@ object BboReplayNode {
 }
 
 case class BboReplayExec(
-    mode: Int, n: Int,
+    mode: ReplayMode, n: Int,
     price: Expression, qty: Expression, isBid: Expression,
     prevPrice: Option[Expression], prevQty: Option[Expression],
     partitionKeys: Seq[Expression],
@@ -85,23 +85,19 @@ case class BboReplayExec(
     val numBooks = longMetric("numBooks")
     val modeL = mode; val nL = n
     val childOutput = child.output
-    val priceE = price; val qtyE = qty; val bidE = isBid
-    val ppE = prevPrice; val pqE = prevQty
+    // price, qty, is_bid, prev_price, prev_qty (null when absent)
+    val eventExprs = Seq(price, qty, isBid) ++
+      Seq(prevPrice, prevQty).map(_.getOrElse(Literal(null, LongType)))
     val keyExprs = partitionKeys
     val outputAttrs = output
 
     child.execute().mapPartitions { it =>
       val keyProj = UnsafeProjection.create(keyExprs, childOutput)
+      // one generated reader for the event columns, whatever their
+      // expressions: casts, arithmetic or bare attributes
+      val eventProj = UnsafeProjection.create(eventExprs, childOutput)
       // identity projection materializing (input ++ bbo) to one UnsafeRow
       val outProj = UnsafeProjection.create(outputAttrs, outputAttrs)
-      // plan-time-resolved ordinal readers: the event expressions are
-      // bare casts over attributes, so each field is a direct primitive
-      // getter — no interpreted Cast.eval, no boxing per row
-      val priceF = BboReplayExec.longField(priceE, childOutput)
-      val qtyF = BboReplayExec.longField(qtyE, childOutput)
-      val bidF = BboReplayExec.boolField(bidE, childOutput)
-      val ppF = ppE.map(BboReplayExec.longField(_, childOutput))
-      val pqF = pqE.map(BboReplayExec.longField(_, childOutput))
       val bboRow = new GenericInternalRow(4 * nL)
       val joined = new JoinedRow
       var book: BookKernel = null
@@ -121,22 +117,15 @@ case class BboReplayExec(
           numBooks += 1
         }
 
-        if (bidF.isNull(row)) OrderBookException.missingValue("is_bid")
-        if (priceF.isNull(row)) OrderBookException.missingValue("price")
-        if (qtyF.isNull(row)) OrderBookException.missingValue("qty")
-        val b = bidF.get(row)
-        val p = priceF.get(row)
-        val q = qtyF.get(row)
-        modeL match {
-          case 0 => Transitions.applyUpdate(book, b, p, q)
-          case 1 => Transitions.applyMutation(book, b, p, q)
-          case 2 =>
-            val hasPP = !ppF.get.isNull(row)
-            val hasPQ = !pqF.get.isNull(row)
-            Transitions.applyMutationWithModify(book, b, p, q,
-              hasPP, if (hasPP) ppF.get.get(row) else 0L,
-              hasPQ, if (hasPQ) pqF.get.get(row) else 0L)
-        }
+        val ev = eventProj(row)
+        if (ev.isNullAt(2)) OrderBookException.missingValue("is_bid")
+        if (ev.isNullAt(0)) OrderBookException.missingValue("price")
+        if (ev.isNullAt(1)) OrderBookException.missingValue("qty")
+        val hasPP = !ev.isNullAt(3)
+        val hasPQ = !ev.isNullAt(4)
+        Transitions(modeL, book, ev.getBoolean(2), ev.getLong(0), ev.getLong(1),
+          hasPP, if (hasPP) ev.getLong(3) else 0L,
+          hasPQ, if (hasPQ) ev.getLong(4) else 0L)
         book.snapshotInto(snap, 0)
         var i = 0
         while (i < 4 * nL) {
@@ -152,97 +141,6 @@ case class BboReplayExec(
 
   override protected def withNewChildInternal(newChild: SparkPlan): BboReplayExec =
     copy(child = newChild)
-}
-
-object BboReplayExec {
-  import org.apache.spark.sql.types._
-
-  /** Primitive field reader: `isNull` must be called before `get` on each
-    * row (the generic fallback evaluates once in isNull and caches). */
-  sealed abstract class LongField {
-    def isNull(r: InternalRow): Boolean
-    def get(r: InternalRow): Long
-  }
-  sealed abstract class BoolField {
-    def isNull(r: InternalRow): Boolean
-    def get(r: InternalRow): Boolean
-  }
-
-  private def ordinalOf(a: Attribute, output: Seq[Attribute]): Int =
-    output.indexWhere(_.exprId == a.exprId)
-
-  /** Resolve an event expression to a direct ordinal getter when it is a
-    * bare (possibly cast) attribute — the shape the operator API always
-    * produces — else fall back to one interpreted eval per row. */
-  def longField(e: Expression, output: Seq[Attribute]): LongField = {
-    def direct(a: Attribute): Option[LongField] = {
-      val i = ordinalOf(a, output)
-      if (i < 0) None
-      else a.dataType match {
-        case LongType => Some(new LongField {
-          def isNull(r: InternalRow) = r.isNullAt(i)
-          def get(r: InternalRow) = r.getLong(i)
-        })
-        case IntegerType => Some(new LongField {
-          def isNull(r: InternalRow) = r.isNullAt(i)
-          def get(r: InternalRow) = r.getInt(i).toLong
-        })
-        case ShortType => Some(new LongField {
-          def isNull(r: InternalRow) = r.isNullAt(i)
-          def get(r: InternalRow) = r.getShort(i).toLong
-        })
-        case ByteType => Some(new LongField {
-          def isNull(r: InternalRow) = r.isNullAt(i)
-          def get(r: InternalRow) = r.getByte(i).toLong
-        })
-        case _ => None
-      }
-    }
-    val resolved = e match {
-      case a: Attribute => direct(a)
-      case c: Cast if c.dataType == LongType =>
-        c.child match {
-          case a: Attribute => direct(a)
-          case _ => None
-        }
-      case _ => None
-    }
-    resolved.getOrElse {
-      val bound = BindReferences.bindReference(e, output)
-      new LongField {
-        private var v: Any = _
-        def isNull(r: InternalRow) = { v = bound.eval(r); v == null }
-        def get(r: InternalRow) = v.asInstanceOf[Long]
-      }
-    }
-  }
-
-  def boolField(e: Expression, output: Seq[Attribute]): BoolField = {
-    def direct(a: Attribute): Option[BoolField] = {
-      val i = ordinalOf(a, output)
-      if (i >= 0 && a.dataType == BooleanType) Some(new BoolField {
-        def isNull(r: InternalRow) = r.isNullAt(i)
-        def get(r: InternalRow) = r.getBoolean(i)
-      }) else None
-    }
-    val resolved = e match {
-      case a: Attribute => direct(a)
-      case c: Cast if c.dataType == BooleanType =>
-        c.child match {
-          case a: Attribute => direct(a)
-          case _ => None
-        }
-      case _ => None
-    }
-    resolved.getOrElse {
-      val bound = BindReferences.bindReference(e, output)
-      new BoolField {
-        private var v: Any = _
-        def isNull(r: InternalRow) = { v = bound.eval(r); v == null }
-        def get(r: InternalRow) = v.asInstanceOf[Boolean]
-      }
-    }
-  }
 }
 
 /** Planner strategy mapping the logical node to its exec. A `Window`

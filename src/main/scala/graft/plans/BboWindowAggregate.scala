@@ -1,9 +1,9 @@
 package graft.plans
 
-import graft.core.OrderBookException
+import graft.core.{OrderBookException, ReplayMode}
 import graft.operators.OrderBookOps
 import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnevaluableAggregateFunc}
+import org.apache.spark.sql.catalyst.expressions.{Cast, Expression, UnevaluableAggregateFunc}
 import org.apache.spark.sql.GraftColumnBridge
 import org.apache.spark.sql.expressions.{Window, WindowSpec}
 import org.apache.spark.sql.types._
@@ -20,16 +20,15 @@ import org.apache.spark.sql.types._
   * the fold is NOT associative (SURVEY.md §7.4), so a partial or shared
   * frame value is not a book replay.
   *
-  * modes: 0 = price updates (O1), 1 = price mutations (O2),
-  * 2 = mutations with modify (O3; 5 child expressions).
+  * `children` are the mode's event expressions, `mode.arity` of them:
+  * (price, qty, is_bid[, prev_price, prev_qty]).
   */
-case class BboWindowAggregate(mode: Int, n: Int, children: Seq[Expression])
+case class BboWindowAggregate(mode: ReplayMode, n: Int, children: Seq[Expression])
   extends UnevaluableAggregateFunc {
 
-  require(n >= 1 && n <= 20, s"Unsupported number of levels: $n")
-  require((mode == 2 && children.size == 5) || (mode != 2 && children.size == 3),
-    "updates/mutations take (price, qty, is_bid); modify takes " +
-      "(price, qty, is_bid, prev_price, prev_qty)")
+  ReplayMode.requireLevels(n)
+  require(children.size == mode.arity,
+    s"$prettyName takes ${mode.arity} event columns, got ${children.size}")
 
   override def nullable: Boolean = false
 
@@ -41,15 +40,19 @@ case class BboWindowAggregate(mode: Int, n: Int, children: Seq[Expression])
       newChildren: IndexedSeq[Expression]): BboWindowAggregate =
     copy(children = newChildren)
 
-  override def prettyName: String = mode match {
-    case 0 => "bbo_from_price_updates"
-    case 1 => "bbo_from_price_mutations"
-    case 2 => "bbo_from_price_mutations_with_modify"
-  }
+  override def prettyName: String = s"bbo_from_${mode.name}"
 }
 
 object BboWindowAggregate {
   def in(e: Expression): Boolean = e.exists(_.isInstanceOf[BboWindowAggregate])
+
+  /** The event expressions cast to the fold's types: is_bid (the third)
+    * to boolean, the others to long. */
+  def castEvents(events: Seq[Expression]): Seq[Expression] =
+    events.zipWithIndex.map {
+      case (e, 2) => Cast(e, BooleanType)
+      case (e, _) => Cast(e, LongType)
+    }
 
   /** The error for any use the replay exec cannot plan; `e` is the
     * offending (window or aggregate) expression. */
@@ -76,27 +79,25 @@ object BboWindow {
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
   }
 
-  private def agg(mode: Int, n: Int, cols: Seq[Column],
+  private def agg(mode: ReplayMode, n: Int, cols: Seq[Column],
                   partitionBy: Seq[Column], orderBy: Seq[Column]): Column = {
     SparkSession.getActiveSession.foreach(BboReplayStrategy.ensureRegistered)
-    val children = cols.map(c => GraftColumnBridge.expression(c))
+    val children = BboWindowAggregate.castEvents(cols.map(GraftColumnBridge.expression))
     val e = BboWindowAggregate(mode, n, children).toAggregateExpression()
     GraftColumnBridge.column(e).over(runningFrame(partitionBy, orderBy))
   }
 
   def fromPriceUpdates(price: Column, qty: Column, isBid: Column, n: Int,
                        partitionBy: Seq[Column], orderBy: Seq[Column]): Column =
-    agg(0, n, Seq(price.cast("long"), qty.cast("long"), isBid.cast("boolean")),
-      partitionBy, orderBy)
+    agg(ReplayMode.Updates, n, Seq(price, qty, isBid), partitionBy, orderBy)
 
   def fromPriceMutations(price: Column, qty: Column, isBid: Column, n: Int,
                          partitionBy: Seq[Column], orderBy: Seq[Column]): Column =
-    agg(1, n, Seq(price.cast("long"), qty.cast("long"), isBid.cast("boolean")),
-      partitionBy, orderBy)
+    agg(ReplayMode.Mutations, n, Seq(price, qty, isBid), partitionBy, orderBy)
 
   def fromPriceMutationsWithModify(price: Column, qty: Column, isBid: Column,
                                    prevPrice: Column, prevQty: Column, n: Int,
                                    partitionBy: Seq[Column], orderBy: Seq[Column]): Column =
-    agg(2, n, Seq(price.cast("long"), qty.cast("long"), isBid.cast("boolean"),
-      prevPrice.cast("long"), prevQty.cast("long")), partitionBy, orderBy)
+    agg(ReplayMode.Modify, n, Seq(price, qty, isBid, prevPrice, prevQty),
+      partitionBy, orderBy)
 }

@@ -1,7 +1,8 @@
 package graft.streaming
 
-import graft.core.{BookCodec, OrderBook, OrderBookException, Transitions}
+import graft.core.{BookCodec, OrderBook, ReplayMode}
 import graft.operators.OrderBookOps
+import graft.operators.OrderBookOps.applyRow
 import org.apache.spark.sql.{DataFrame, Encoder, Encoders, Row}
 import org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema
 import org.apache.spark.sql.functions._
@@ -18,14 +19,11 @@ import org.apache.spark.sql.types._
   * as the reference requires pre-sorted input, README.md:182). State is
   * the compact BookCodec encoding, so a 1000-executor cluster holds one
   * small blob per product, not per row.
+  *
+  * Null contract: as in the batch replay, a null price, qty or is_bid
+  * fails the query with the missing-value error naming the column.
   */
 object OrderBookStream {
-
-  /** Typed micro-batch event for the modify variant. `et` is the
-    * event-time when event-time eviction is configured, null otherwise. */
-  case class ModifyEvent(pkey: Long, okey: Long, price: Long, qty: Long,
-                         isBid: Boolean, pp: Option[Long], pq: Option[Long],
-                         et: java.sql.Timestamp = null)
 
   /** Timeout mode: EVENT-time when a watermarked column is named
     * (eviction keyed to stream time — a faster-than-realtime historical
@@ -118,11 +116,30 @@ object OrderBookStream {
         "books / scramble order")
   }
 
-  /** Max event time of a batch in epoch millis (Long.MinValue when no
-    * event times ride the batch). */
-  private[streaming] def maxEventMs(ets: Iterator[java.sql.Timestamp]): Long = {
+  /** The micro-batch rows every entry point folds: the partition and
+    * order keys cast to long (ordinals 0, 1), the
+    * [[OrderBookOps.eventColumns]] from ordinal 2 — nullable, so the fold
+    * raises the batch replay's missing-value error — and the event time
+    * (ordinal 7). */
+  private def events(df: DataFrame, price: String, qty: String, isBid: String,
+                     prev: Option[(String, String)], partitionBy: String,
+                     orderBy: String, eventTimeCol: Option[String]): DataFrame = {
+    requireIntegral(df, partitionBy, orderBy)
+    df.select(Seq(col(partitionBy).cast("long").as("pkey"),
+      col(orderBy).cast("long").as("okey")) ++
+      OrderBookOps.eventColumns(price, qty, isBid, prev) :+
+      etimeExpr(eventTimeCol): _*)
+  }
+
+  /** Max event time of a batch of [[events]] rows in epoch millis
+    * (Long.MinValue when no event times ride the batch). */
+  private def maxEventMs(rows: Array[Row]): Long = {
     var m = Long.MinValue
-    ets.foreach(t => if (t != null && t.getTime > m) m = t.getTime)
+    rows.foreach(_.get(7) match {
+      case t: java.sql.Timestamp => m = math.max(m, t.getTime)
+      case t: java.time.Instant => m = math.max(m, t.toEpochMilli)
+      case _ =>
+    })
     m
   }
 
@@ -159,79 +176,27 @@ object OrderBookStream {
       partitionBy: String, orderBy: String,
       idleTimeout: Option[String] = None,
       eventTimeCol: Option[String] = None): DataFrame =
-    replayStream(df, price, qty, isBid, n, partitionBy, orderBy,
-      mutation = false, idleTimeout, eventTimeCol)
+    replayStream(df, price, qty, isBid, None, n, partitionBy, orderBy,
+      ReplayMode.Updates, idleTimeout, eventTimeCol)
 
   def topNLevelsFromPriceMutations(
       df: DataFrame, price: String, qty: String, isBid: String, n: Int,
       partitionBy: String, orderBy: String,
       idleTimeout: Option[String] = None,
       eventTimeCol: Option[String] = None): DataFrame =
-    replayStream(df, price, qty, isBid, n, partitionBy, orderBy,
-      mutation = true, idleTimeout, eventTimeCol)
+    replayStream(df, price, qty, isBid, None, n, partitionBy, orderBy,
+      ReplayMode.Mutations, idleTimeout, eventTimeCol)
 
-  /** Streaming O3: mutations with modify (nullable prev columns).
-    * `idleTimeout` evicts idle products' book state like the O1/O2
-    * variants. */
+  /** Streaming O3: mutations with modify — as the O1/O2 variants, with
+    * the nullable prev columns read by the 9-case transition table. */
   def topNLevelsFromPriceMutationsWithModify(
       df: DataFrame, price: String, qty: String, isBid: String,
       prevPrice: String, prevQty: String, n: Int,
       partitionBy: String, orderBy: String,
       idleTimeout: Option[String] = None,
-      eventTimeCol: Option[String] = None): DataFrame = {
-
-    val outSchema = StructType(
-      StructField(partitionBy, LongType) +:
-        StructField(orderBy, LongType) +:
-        OrderBookOps.bboFieldNames(n).map(StructField(_, LongType, nullable = true)))
-
-    requireIntegral(df, partitionBy, orderBy)
-    val work = df.select(
-      col(partitionBy).cast("long").as("pkey"),
-      col(orderBy).cast("long").as("okey"),
-      col(price).cast("long").as("price"),
-      col(qty).cast("long").as("qty"),
-      col(isBid).cast("boolean").as("isBid"),
-      col(prevPrice).cast("long").as("pp"),
-      col(prevQty).cast("long").as("pq"),
-      etimeExpr(eventTimeCol))
-
-    val rowEnc: Encoder[Row] = Encoders.row(outSchema)
-    implicit val evEnc: Encoder[ModifyEvent] = Encoders.product[ModifyEvent]
-
-    val eventMode = eventTimeCol.isDefined
-    work.as[ModifyEvent]
-      .groupByKey(_.pkey)(Encoders.scalaLong)
-      .flatMapGroupsWithState[Array[Byte], Row](
-        OutputMode.Append(), timeoutConf(idleTimeout, eventTimeCol)) {
-        (key: Long, rows: Iterator[ModifyEvent], state: GroupState[Array[Byte]]) =>
-          if (state.hasTimedOut) {
-            state.remove()
-            Iterator.empty
-          } else {
-            val (blob0, prevMaxEv) =
-              if (state.exists) unpackBookState(state.get)
-              else (null, Long.MinValue)
-            val book =
-              if (blob0 != null) BookCodec.deserialize(blob0) else new OrderBook(n)
-            val sorted = rows.toArray.sortBy(_.okey)
-            val out = sorted.iterator.map { e =>
-              Transitions.applyMutationWithModify(book, e.isBid, e.price, e.qty,
-                e.pp.isDefined, e.pp.getOrElse(0L), e.pq.isDefined, e.pq.getOrElse(0L))
-              val vals = new Array[Any](2 + 4 * n)
-              vals(0) = key
-              vals(1) = e.okey
-              book.snapshotInto(vals, 2)
-              new GenericRowWithSchema(vals, outSchema): Row
-            }.toArray
-            val maxEv = math.max(prevMaxEv,
-              maxEventMs(sorted.iterator.map(_.et)))
-            state.update(packBookState(BookCodec.serialize(book), maxEv))
-            armIdleTimeout(state, idleTimeout, eventMode, maxEv)
-            out.iterator
-          }
-      }(Encoders.BINARY, rowEnc)
-  }
+      eventTimeCol: Option[String] = None): DataFrame =
+    replayStream(df, price, qty, isBid, Some((prevPrice, prevQty)), n,
+      partitionBy, orderBy, ReplayMode.Modify, idleTimeout, eventTimeCol)
 
   /** Typed state for the analytics replay: the book blob plus the
     * previous event's top-of-book (None ≡ "no previous two-sided
@@ -284,27 +249,16 @@ object OrderBookStream {
           Seq(StructField("ofi", LongType, nullable = false),
             StructField("cum_ofi", LongType, nullable = false))))
 
-    requireIntegral(df, partitionBy, orderBy)
-    val work = df.select(
-      col(partitionBy).cast("long").as("pkey"),
-      col(orderBy).cast("long").as("okey"),
-      col(price).cast("long").as("price"),
-      col(qty).cast("long").as("qty"),
-      col(isBid).cast("boolean").as("is_bid"),
-      etimeExpr(eventTimeCol))
+    val work = events(df, price, qty, isBid, None, partitionBy, orderBy, eventTimeCol)
 
     implicit val rowEnc: Encoder[Row] = Encoders.row(outSchema)
     implicit val stEnc: Encoder[OfiState] = Encoders.product[OfiState]
-    implicit val tupEnc: Encoder[(Long, Long, Long, Long, Boolean, java.sql.Timestamp)] =
-      Encoders.product[(Long, Long, Long, Long, Boolean, java.sql.Timestamp)]
 
     val eventMode = eventTimeCol.isDefined
-    work.as[(Long, Long, Long, Long, Boolean, java.sql.Timestamp)]
-      .groupByKey(_._1)(Encoders.scalaLong)
+    work.groupByKey(_.getLong(0))(Encoders.scalaLong)
       .flatMapGroupsWithState[OfiState, Row](
         OutputMode.Append(), timeoutConf(idleTimeout, eventTimeCol)) {
-        (key: Long, rows: Iterator[(Long, Long, Long, Long, Boolean, java.sql.Timestamp)],
-         state: GroupState[OfiState]) =>
+        (key: Long, rows: Iterator[Row], state: GroupState[OfiState]) =>
           if (state.hasTimedOut) {
             state.remove()
             Iterator.empty
@@ -316,10 +270,10 @@ object OrderBookStream {
             var pb = st0.pb; var pqb = st0.pqb
             var pa = st0.pa; var pqa = st0.pqa
             var cum = st0.cum
-            val sorted = rows.toArray.sortBy(_._2)
+            val sorted = rows.toArray.sortBy(_.getLong(1))
             val snap = new Array[Any](4)
-            val out = sorted.iterator.map { case (_, okey, p, q, bSide, _) =>
-              Transitions.applyUpdate(book, bSide, p, q)
+            val out = sorted.map { r =>
+              applyRow(ReplayMode.Updates, book, r, 2, price, qty, isBid)
               book.snapshotInto(snap, 0)
               val b = snap(0).asInstanceOf[java.lang.Long]
               val qb = snap(1).asInstanceOf[java.lang.Long]
@@ -344,11 +298,10 @@ object OrderBookStream {
               pa = Option(a).map(_.longValue)
               pqa = Option(qa).map(_.longValue)
               new GenericRowWithSchema(
-                Array[Any](key, okey, b, qb, a, qa, ofi, cum),
+                Array[Any](key, r.getLong(1), b, qb, a, qa, ofi, cum),
                 outSchema): Row
-            }.toArray
-            val maxEv = math.max(st0.maxEv,
-              maxEventMs(sorted.iterator.map(_._6)))
+            }
+            val maxEv = math.max(st0.maxEv, maxEventMs(sorted))
             state.update(OfiState(
               BookCodec.serialize(book), pb, pqb, pa, pqa, cum, maxEv))
             armIdleTimeout(state, idleTimeout, eventMode, maxEv)
@@ -416,27 +369,16 @@ object OrderBookStream {
       StructField("n_moves", LongType, nullable = false),
       StructField("rv_x4", LongType, nullable = false)))
 
-    requireIntegral(df, partitionBy, orderBy)
-    val work = df.select(
-      col(partitionBy).cast("long").as("pkey"),
-      col(orderBy).cast("long").as("okey"),
-      col(price).cast("long").as("price"),
-      col(qty).cast("long").as("qty"),
-      col(isBid).cast("boolean").as("is_bid"),
-      etimeExpr(eventTimeCol))
+    val work = events(df, price, qty, isBid, None, partitionBy, orderBy, eventTimeCol)
 
     implicit val rowEnc: Encoder[Row] = Encoders.row(outSchema)
     implicit val stEnc: Encoder[SummaryState] = Encoders.product[SummaryState]
-    implicit val tupEnc: Encoder[(Long, Long, Long, Long, Boolean, java.sql.Timestamp)] =
-      Encoders.product[(Long, Long, Long, Long, Boolean, java.sql.Timestamp)]
 
     val eventMode = eventTimeCol.isDefined
-    work.as[(Long, Long, Long, Long, Boolean, java.sql.Timestamp)]
-      .groupByKey(_._1)(Encoders.scalaLong)
+    work.groupByKey(_.getLong(0))(Encoders.scalaLong)
       .flatMapGroupsWithState[SummaryState, Row](
         OutputMode.Append(), timeoutConf(idleTimeout, eventTimeCol)) {
-        (key: Long, rows: Iterator[(Long, Long, Long, Long, Boolean, java.sql.Timestamp)],
-         state: GroupState[SummaryState]) =>
+        (key: Long, rows: Iterator[Row], state: GroupState[SummaryState]) =>
           def summaryRow(st: SummaryState): Row = {
             // Spark's `div` truncates toward zero (IntegralDivide),
             // so plain Java division — NOT floorDiv — matches the
@@ -470,9 +412,10 @@ object OrderBookStream {
             val book = if (st.book != null) BookCodec.deserialize(st.book)
               else new OrderBook(1)
             val snap = new Array[Any](4)
-            val sorted = rows.toArray.sortBy(_._2)
-            sorted.foreach { case (_, okey, p, q, bSide, _) =>
-              Transitions.applyUpdate(book, bSide, p, q)
+            val sorted = rows.toArray.sortBy(_.getLong(1))
+            sorted.foreach { r =>
+              val okey = r.getLong(1)
+              applyRow(ReplayMode.Updates, book, r, 2, price, qty, isBid)
               book.snapshotInto(snap, 0)
               val b = snap(0).asInstanceOf[java.lang.Long]
               val a = snap(2).asInstanceOf[java.lang.Long]
@@ -506,8 +449,7 @@ object OrderBookStream {
             val out =
               if (st.nEvents == 0) Iterator.empty
               else Iterator.single(summaryRow(st))
-            val maxEv = math.max(st.maxEv,
-              maxEventMs(sorted.iterator.map(_._6)))
+            val maxEv = math.max(st.maxEv, maxEventMs(sorted))
             state.update(st.copy(book = BookCodec.serialize(book),
               emit = st.emit + 1, maxEv = maxEv))
             armIdleTimeout(state, idleTimeout, eventMode, maxEv)
@@ -516,38 +458,25 @@ object OrderBookStream {
       }(stEnc, rowEnc)
   }
 
+  /** The O1/O2/O3 fold: `prev` holds Modify's (prev_price, prev_qty). */
   private def replayStream(
-      df: DataFrame, price: String, qty: String, isBid: String, n: Int,
-      partitionBy: String, orderBy: String, mutation: Boolean,
-      idleTimeout: Option[String] = None,
-      eventTimeCol: Option[String] = None): DataFrame = {
+      df: DataFrame, price: String, qty: String, isBid: String,
+      prev: Option[(String, String)], n: Int,
+      partitionBy: String, orderBy: String, mode: ReplayMode,
+      idleTimeout: Option[String], eventTimeCol: Option[String]): DataFrame = {
 
+    ReplayMode.requireLevels(n)
     val outSchema = StructType(
       StructField(partitionBy, LongType) +:
         StructField(orderBy, LongType) +:
         OrderBookOps.bboFieldNames(n).map(StructField(_, LongType, nullable = true)))
-
-    requireIntegral(df, partitionBy, orderBy)
-    val work = df.select(
-      col(partitionBy).cast("long").as("pkey"),
-      col(orderBy).cast("long").as("okey"),
-      col(price).cast("long").as("price"),
-      col(qty).cast("long").as("qty"),
-      col(isBid).cast("boolean").as("is_bid"),
-      etimeExpr(eventTimeCol))
-
-    implicit val rowEnc: Encoder[Row] = Encoders.row(outSchema)
-    implicit val longEnc: Encoder[Long] = Encoders.scalaLong
-    implicit val tupEnc: Encoder[(Long, Long, Long, Long, Boolean, java.sql.Timestamp)] =
-      Encoders.product[(Long, Long, Long, Long, Boolean, java.sql.Timestamp)]
+    val work = events(df, price, qty, isBid, prev, partitionBy, orderBy, eventTimeCol)
 
     val eventMode = eventTimeCol.isDefined
-    work.as[(Long, Long, Long, Long, Boolean, java.sql.Timestamp)]
-      .groupByKey(_._1)
+    work.groupByKey(_.getLong(0))(Encoders.scalaLong)
       .flatMapGroupsWithState[Array[Byte], Row](
         OutputMode.Append(), timeoutConf(idleTimeout, eventTimeCol)) {
-        (key: Long, rows: Iterator[(Long, Long, Long, Long, Boolean, java.sql.Timestamp)],
-         state: GroupState[Array[Byte]]) =>
+        (key: Long, rows: Iterator[Row], state: GroupState[Array[Byte]]) =>
           if (state.hasTimedOut) {
             // idle product: drop the book; a later re-appearance replays
             // from a fresh (empty) book
@@ -560,22 +489,20 @@ object OrderBookStream {
             val book =
               if (blob0 != null) BookCodec.deserialize(blob0) else new OrderBook(n)
             // fold in order within this micro-batch
-            val sorted = rows.toArray.sortBy(_._2)
-            val out = sorted.iterator.map { case (_, okey, p, q, b, _) =>
-              if (mutation) Transitions.applyMutation(book, b, p, q)
-              else Transitions.applyUpdate(book, b, p, q)
+            val sorted = rows.toArray.sortBy(_.getLong(1))
+            val out = sorted.map { r =>
+              applyRow(mode, book, r, 2, price, qty, isBid)
               val vals = new Array[Any](2 + 4 * n)
               vals(0) = key
-              vals(1) = okey
+              vals(1) = r.getLong(1)
               book.snapshotInto(vals, 2)
               new GenericRowWithSchema(vals, outSchema): Row
-            }.toArray
-            val maxEv = math.max(prevMaxEv,
-              maxEventMs(sorted.iterator.map(_._6)))
+            }
+            val maxEv = math.max(prevMaxEv, maxEventMs(sorted))
             state.update(packBookState(BookCodec.serialize(book), maxEv))
             armIdleTimeout(state, idleTimeout, eventMode, maxEv)
             out.iterator
           }
-      }(Encoders.BINARY, rowEnc)
+      }(Encoders.BINARY, Encoders.row(outSchema))
   }
 }

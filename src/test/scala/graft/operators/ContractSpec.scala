@@ -21,17 +21,25 @@ class ContractSpec extends AnyFunSuite {
     .toDF("seq", "product", "is_bid", "price", "qty")
 
   test("n outside 1..=20 is rejected with the reference message") {
-    for (bad <- Seq(0, -1, 21, 100)) {
-      val e = intercept[IllegalArgumentException] {
-        OrderBookOps.topNLevelsFromPriceUpdates(
-          stream, "price", "qty", "is_bid", bad, Seq("product"), Seq("seq"))
+    import graft.streaming.OrderBookStream
+    val withPrev = stream.withColumn("prev_price", lit(null).cast("long"))
+      .withColumn("prev_qty", lit(null).cast("long"))
+    val entries: Seq[(String, Int => org.apache.spark.sql.DataFrame)] = Seq(
+      "exec" -> (n => OrderBookOps.topNLevelsFromPriceUpdates(
+        stream, "price", "qty", "is_bid", n, Seq("product"), Seq("seq"))),
+      "stream updates" -> (n => OrderBookStream.topNLevelsFromPriceUpdates(
+        stream, "price", "qty", "is_bid", n, "product", "seq")),
+      "stream mutations" -> (n => OrderBookStream.topNLevelsFromPriceMutations(
+        stream, "price", "qty", "is_bid", n, "product", "seq")),
+      "stream modify" -> (n => OrderBookStream.topNLevelsFromPriceMutationsWithModify(
+        withPrev, "price", "qty", "is_bid", "prev_price", "prev_qty", n, "product", "seq")))
+    for ((name, entry) <- entries) {
+      for (bad <- Seq(0, -1, 21, 100)) {
+        val e = intercept[IllegalArgumentException](entry(bad))
+        assert(e.getMessage.contains(s"Unsupported number of levels: $bad"), name)
       }
-      assert(e.getMessage.contains(s"Unsupported number of levels: $bad"))
-    }
-    // boundary values are accepted
-    for (ok <- Seq(1, 20)) {
-      OrderBookOps.topNLevelsFromPriceUpdates(
-        stream, "price", "qty", "is_bid", ok, Seq("product"), Seq("seq")).collect()
+      // boundary values are accepted
+      for (ok <- Seq(1, 20)) assert(entry(ok).collect().length == 3, name)
     }
   }
 
@@ -50,6 +58,25 @@ class ContractSpec extends AnyFunSuite {
     assert(out.length == 3)
     assert(out(0).getLong(1) == 10L && out(0).getLong(2) == 5L)
     assert(out(2).getLong(1) == 11L && out(2).getLong(2) == 2L)
+
+    // a computed event expression, in SQL and through BboWindow, equals
+    // the replay of the pre-doubled column
+    def sqlBbo(price: String) = spark.sql(
+      s"""SELECT seq, bbo_from_price_updates($price, qty, is_bid, 1) OVER (
+         |  PARTITION BY product ORDER BY seq
+         |  ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS bbo
+         |FROM contract_int_doubled""".stripMargin)
+    spark.table("contract_int_stream").withColumn("price2", col("price") * 2)
+      .createOrReplaceTempView("contract_int_doubled")
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select(col("seq"), col("bbo.*")).orderBy("seq").collect().toSeq
+    val doubled = rows(sqlBbo("price2"))
+    assert(doubled.length == 3 && doubled(0).getLong(1) == 20L)
+    assert(rows(sqlBbo("price * 2")) == doubled)
+    val viaWindow = spark.table("contract_int_doubled").select(col("seq"),
+      graft.plans.BboWindow.fromPriceUpdates(col("price") * 2, col("qty"), col("is_bid"), 1,
+        Seq(col("product")), Seq(col("seq"))).as("bbo"))
+    assert(rows(viaWindow) == doubled)
   }
 
   test("Column-typed overloads equal the string API, including expressions") {

@@ -116,7 +116,7 @@ class BboWindowSpec extends AnyFunSuite {
          |FROM bbo_window_spec""".stripMargin).queryExecution.sparkPlan
     val df = Seq((1L, 1L, true)).toDF("price", "qty", "is_bid")
     val c = org.apache.spark.sql.GraftColumnBridge.column(
-      BboWindowAggregate(0, 1, Seq(
+      BboWindowAggregate(graft.core.ReplayMode.Updates, 1, Seq(
         org.apache.spark.sql.GraftColumnBridge.expression(col("price")),
         org.apache.spark.sql.GraftColumnBridge.expression(col("qty")),
         org.apache.spark.sql.GraftColumnBridge.expression(col("is_bid"))))

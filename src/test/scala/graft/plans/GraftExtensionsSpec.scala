@@ -43,7 +43,7 @@ class GraftExtensionsSpec extends AnyFunSuite {
       val df = spark.table("ext_stream")
       val analyzed = df.queryExecution.analyzed
       def attr(n: String) = analyzed.output.find(_.name == n).get
-      val node = BboReplayNode(0, 1,
+      val node = BboReplayNode(graft.core.ReplayMode.Updates, 1,
         Cast(attr("price"), LongType), Cast(attr("qty"), LongType),
         Cast(attr("is_bid"), BooleanType), None, None,
         Seq(attr("product")), Seq(SortOrder(attr("seq"), Ascending)),

@@ -205,6 +205,34 @@ class OrderBookStreamSpec extends AnyFunSuite {
     "analyticsSummaryStream" -> (df => OrderBookStream.analyticsSummaryStream(
       df, "price", "qty", "is_bid", "product", "seq")))
 
+  // A null event value must fail the query with the batch replay's
+  // missing-value error naming the column, not an encoder assertion.
+  for ((name, entry) <- entryPoints)
+    test(s"$name raises the batch error for a null price, qty or is_bid") {
+      implicit val sqlCtx = spark.sqlContext
+      for (missing <- Seq("price", "qty", "is_bid")) {
+        val mem = MemoryStream[(Long, Long, Option[Long], Option[Long], Option[Boolean],
+          Option[Long], Option[Long])]
+        val sdf = mem.toDF.toDF("product", "seq", "price", "qty", "is_bid",
+          "prev_price", "prev_qty")
+        val query = entry(sdf).asInstanceOf[org.apache.spark.sql.DataFrame]
+          .writeStream.format("memory").queryName(s"null_${name}_$missing")
+          .outputMode("append").start()
+        try {
+          mem.addData((1L, 0L,
+            if (missing == "price") None else Some(10L),
+            if (missing == "qty") None else Some(5L),
+            if (missing == "is_bid") None else Some(true), None, None))
+          val e = intercept[org.apache.spark.sql.streaming.StreamingQueryException](
+            query.processAllAvailable())
+          val msgs = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+            .map(_.getMessage).toList
+          assert(msgs.exists(m => m != null &&
+            m.contains(s"Missing value in required column: $missing")), msgs.mkString("\n"))
+        } finally query.stop()
+      }
+    }
+
   for ((name, entry) <- entryPoints)
     test(s"$name rejects a DOUBLE orderBy") {
       val df = Seq((1L, 0.5, 10L, 1L, true, Option.empty[Long], Option.empty[Long]))
